@@ -1,6 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value", "unit", "queries", "sf"}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], in the session
+the engine's factory builds (`etl_acordos_spark.session.get_spark`, the
+one the tests verify), and prints ONE JSON line:
+{"metric", "value", "unit", "queries", "sf"}.
 
 Each query is forced to full materialization with the noop sink (no
 driver-side collect overhead, no result transfer skew). One warmup query
@@ -20,7 +22,6 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 #: min-of-N runs per query (N>=2 amortizes JIT; bump for variance hunts)
 RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
 #: prior-round bench file to emit per-query ratios against (variance audit)
@@ -379,24 +380,9 @@ def build_contract_line(
 def main() -> None:
     start_env = env_snapshot()
 
-    from pyspark.sql import SparkSession
+    from etl_acordos_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("etl-acordos-spark-bench")
-        # the box has 128 GiB; the JVM default (1g) GC-storms once the
-        # headline set passed ~110 keys (broadcast builds started
-        # failing with "Not enough memory to broadcast" mid-run in r6)
-        .config("spark.driver.memory", os.environ.get(
-            "SPARK_GRAFT_DRIVER_MEM", "8g"
-        ))
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="etl-acordos-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as contract

@@ -23,6 +23,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_acordos_spark.session import scoped_conf
+
 
 def let_bound(value_expr: str, var: str, body_expr: str) -> str:
     """SQL let-binding via the single-element-array lambda idiom:
@@ -1163,62 +1165,63 @@ def component_labels(
     # coalescing, so pin the shuffle width to cores for the loop (each
     # round materializes eagerly via the convergence count, then the
     # prior conf is restored).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(spark.sparkContext.defaultParallelism),
-    )
+    loop_conf = {
+        "spark.sql.shuffle.partitions": str(
+            spark.sparkContext.defaultParallelism
+        )
+    }
     try:
-        # The pair stream feeding `edges` can be an expensive plan (LSH
-        # banding); cache it so each round re-reads, not re-derives.
-        edges = edges.cache()
-        labels = docs.select(
-            F.col(id_col).alias("a"), F.col(id_col).alias("label")
-        ).localCheckpoint(eager=True)
-        for _ in range(max_iter):
-            neighbor_min = (
-                edges.join(labels.withColumnRenamed("a", "b"), "b")
-                .groupBy("a")
-                .agg(F.min("label").alias("nlabel"))
-            )
-            hopped = labels.join(neighbor_min, "a", "left").select(
-                "a",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-            # pointer jump (path halving): label := label(label). Labels
-            # are monotone (label(v) <= v), so the parent lookup always
-            # moves toward the component minimum; coalesce covers labels
-            # pointing at ids outside the doc set (defensive).
-            parents = hopped.select(
-                F.col("a").alias("label"), F.col("label").alias("jlabel")
-            )
-            # localCheckpoint, not cache: the jump references `hopped`
-            # twice, so an uncut lineage would DOUBLE the logical plan
-            # every round — exponential analyzer blow-up by iteration
-            # ~10. Checkpointing materializes the round and resets the
-            # plan to a leaf (iterative algorithms are the one place
-            # lineage must be cut by hand).
-            new_labels = (
-                hopped.join(parents, "label", "left")
-                .select(
-                    "a", F.coalesce("jlabel", F.col("label")).alias("label")
+        with scoped_conf(spark, loop_conf):
+            # The pair stream feeding `edges` can be an expensive plan (LSH
+            # banding); cache it so each round re-reads, not re-derives.
+            edges = edges.cache()
+            labels = docs.select(
+                F.col(id_col).alias("a"), F.col(id_col).alias("label")
+            ).localCheckpoint(eager=True)
+            for _ in range(max_iter):
+                neighbor_min = (
+                    edges.join(labels.withColumnRenamed("a", "b"), "b")
+                    .groupBy("a")
+                    .agg(F.min("label").alias("nlabel"))
                 )
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "a")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
+                hopped = labels.join(neighbor_min, "a", "left").select(
+                    "a",
+                    F.least(
+                        F.col("label"), F.coalesce("nlabel", F.col("label"))
+                    ).alias("label"),
+                )
+                # pointer jump (path halving): label := label(label). Labels
+                # are monotone (label(v) <= v), so the parent lookup always
+                # moves toward the component minimum; coalesce covers labels
+                # pointing at ids outside the doc set (defensive).
+                parents = hopped.select(
+                    F.col("a").alias("label"), F.col("label").alias("jlabel")
+                )
+                # localCheckpoint, not cache: the jump references `hopped`
+                # twice, so an uncut lineage would DOUBLE the logical plan
+                # every round — exponential analyzer blow-up by iteration
+                # ~10. Checkpointing materializes the round and resets the
+                # plan to a leaf (iterative algorithms are the one place
+                # lineage must be cut by hand).
+                new_labels = (
+                    hopped.join(parents, "label", "left")
+                    .select(
+                        "a",
+                        F.coalesce("jlabel", F.col("label")).alias("label"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
+                changed = (
+                    new_labels.alias("n")
+                    .join(labels.alias("o"), "a")
+                    .filter(F.col("n.label") != F.col("o.label"))
+                    .limit(1)
+                    .count()
+                )
+                labels = new_labels
+                if changed == 0:
+                    break
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         # the loop has fully materialized `labels` (checkpoint leaf), so
         # the cached edges plan is dead weight — drop it rather than
         # leak one CacheManager entry per keep-set/cluster-stats call

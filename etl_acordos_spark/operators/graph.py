@@ -146,7 +146,6 @@ def triangle_counts(
     k: int = 20,
     broadcast_edges: bool | None = None,
     broadcast_max_edges: int = 20_000_000,
-    hybrid_core_max_cells: int | None = None,
 ) -> DataFrame:
     """Top-k vertices by triangle participation over an undirected
     edge list (src < dst, distinct).
@@ -179,31 +178,6 @@ def triangle_counts(
     probes is ~12 GiB per executor, too much at ANY executor size worth
     provisioning. The count is one cheap job over the already-
     checkpointed oriented leaf.
-
-    *hybrid_core_max_cells* > 0 switches the fallback to a SKEW-SPLIT
-    HYBRID (r13, guide §2.4/§2.5): the wedge volume through a middle
-    vertex v is indeg(v)·outdeg(v) while broadcasting v's adjacency
-    costs outdeg(v) map cells — coverage per cell is exactly
-    indeg(v) — so the adjacency of the highest-indeg CORE that fits
-    the given cell budget is broadcast and those edges close by a
-    pinned array_intersect pass, while only the middles OUTSIDE the
-    core go through the shuffled wedge joins. Each triangle u→w, u→x,
-    w→x is still found exactly once, at its detection edge (u, w): the
-    intersection side handles it iff w is in the core, the wedge join
-    (middle = w) otherwise. Core selection is all-or-nothing per indeg
-    VALUE over the degree histogram (≤ O(√m) distinct values — a
-    driver-side prefix scan of the same class as the crossover count),
-    deterministic and under budget by construction.
-
-    The hybrid is OFF by default (``None`` → 0, pure r11 wedge joins)
-    on measurement: with a 20M-cell core (41.5% wedge coverage) it won
-    the 10× forced-fallback tile by 21% (33.4 vs 42.3 s) but measured
-    ~5% SLOWER at the 100× tile (731.4 vs 698.1 s, single runs) where
-    one box's disk bandwidth bounds both the wedge shuffle it saves
-    and the adjacency build + intersect pass it adds — BASELINE.md
-    "Round-13: triangle skew-split hybrid". On a cluster whose wedge
-    shuffle crosses NICs the trade should tip the other way; callers
-    there opt in with a budget sized like *broadcast_max_edges*.
 
     Returns (vertex, n_triangles) — k rows.
     """
@@ -289,7 +263,20 @@ def triangle_counts(
         tri_e = e2.select(
             "u", "w", F.array_intersect("_nu", "_nw").alias("_x")
         ).filter(F.size("_x") > 0)
-        return _vertex_topk(_intersection_contribs(tri_e), k)
+        csize = F.size("_x").cast("long")
+        return _vertex_topk(
+            tri_e.select(F.col("u").alias("vertex"), csize.alias("c"))
+            .unionAll(
+                tri_e.select(F.col("w").alias("vertex"), csize.alias("c"))
+            )
+            .unionAll(
+                tri_e.select(
+                    F.explode("_x").alias("vertex"),
+                    F.lit(1).cast("long").alias("c"),
+                )
+            ),
+            k,
+        )
     # shuffled fallback (beyond the broadcast crossover): wedge joins
     # with HASH-hinted build sides. A sort-merge plan would SORT the
     # wedge stream — O(m^1.5) rows, ~4B at the 100x tile — before the
@@ -303,86 +290,7 @@ def triangle_counts(
     # disk cost is the wedge shuffle write itself. (A fully SHUFFLED
     # adjacency-intersection would move O(Σ outdeg²) array bytes — the
     # wedge volume — through the exchange, strictly worse than
-    # shuffling the wedge rows themselves; hence the r13 hybrid below
-    # broadcasts only the core adjacency it can afford and wedge-joins
-    # the rest.)
-    budget = 0 if hybrid_core_max_cells is None else hybrid_core_max_cells
-    tau = None
-    if budget > 0:
-        # degree histogram: ≤ O(√m) rows — a driver-side prefix scan of
-        # the same class as the crossover count above
-        outd = oriented.groupBy("u").agg(F.count("*").alias("_od"))
-        ind = oriented.groupBy("w").agg(F.count("*").alias("_id"))
-        vstats = ind.join(outd, ind["w"] == outd["u"]).select(
-            ind["w"].alias("_cv"), "_id", "_od"
-        )
-        cells = 0
-        for r in (
-            vstats.groupBy("_id")
-            .agg(F.sum("_od").alias("_cells"))
-            .orderBy(F.desc("_id"))
-            .collect()
-        ):
-            if cells + r["_cells"] > budget:
-                break
-            cells += r["_cells"]
-            tau = r["_id"]
-    if tau is not None:
-        # skew-split hybrid: adjacency intersection for edges whose
-        # detection endpoint w sits in the high-indeg core, wedge joins
-        # (with both join sides pre-filtered to non-core middles) for
-        # the rest. The core set and the full adjacency are pinned —
-        # each is referenced twice and exchange reuse does not cover
-        # the post-exchange aggregates.
-        core = (
-            vstats.filter(F.col("_id") >= tau)
-            .select("_cv")
-            .localCheckpoint(eager=True)
-        )
-        adj = (
-            oriented.groupBy("u")
-            .agg(F.collect_list("w").alias("_nbrs"))
-            .localCheckpoint(eager=True, storageLevel=_EDGE_PIN)
-        )
-        adj_core = adj.join(
-            F.broadcast(core), adj["u"] == core["_cv"]
-        ).select(F.col("u").alias("w"), F.col("_nbrs").alias("_nw"))
-        e2 = adj.select(
-            "u", F.explode("_nbrs").alias("w"), F.col("_nbrs").alias("_nu")
-        ).join(F.broadcast(adj_core), "w")
-        # PINNED, unlike the broadcast branch's re-intersect: here the
-        # covered intersect work is the covered wedge volume (1.69B
-        # element scans at the 100x tile) — re-running it per
-        # contribution branch tripled it and measured SLOWER than the
-        # pure wedge join (833.9 s vs 698.1 s, first r13 100x cut);
-        # the pin holds only the closed edges and their (small)
-        # intersection arrays.
-        tri_e = e2.select(
-            "u", "w", F.array_intersect("_nu", "_nw").alias("_x")
-        ).filter(F.size("_x") > 0).localCheckpoint(
-            eager=True, storageLevel=_EDGE_PIN
-        )
-        o1 = oriented.join(
-            F.broadcast(core), oriented["w"] == core["_cv"], "left_anti"
-        ).select(F.col("u").alias("a"), F.col("w").alias("b"))
-        o2 = (
-            oriented.join(
-                F.broadcast(core), oriented["u"] == core["_cv"], "left_anti"
-            )
-            .select(F.col("u").alias("b"), F.col("w").alias("c"))
-            .hint("SHUFFLE_HASH")
-        )
-        o3 = oriented.select(
-            F.col("u").alias("a"), F.col("w").alias("c")
-        ).hint("SHUFFLE_HASH")
-        tri = o1.join(o2, "b").join(o3, ["a", "c"])
-        contribs = _intersection_contribs(tri_e).unionAll(
-            tri.select(F.explode(F.array("a", "b", "c")).alias("vertex"))
-            .select("vertex", F.lit(1).cast("long").alias("c"))
-        )
-        return _vertex_topk(contribs, k)
-    # pure wedge joins (empty core: budget 0, or the single top indeg
-    # value alone overflows it) — the r11 shape, unchanged
+    # shuffling the wedge rows themselves.)
     o1 = oriented.select(F.col("u").alias("a"), F.col("w").alias("b"))
     o2 = oriented.select(F.col("u").alias("b"), F.col("w").alias("c")).hint(
         "SHUFFLE_HASH"
@@ -395,29 +303,6 @@ def triangle_counts(
         tri.select(F.explode(F.array("a", "b", "c")).alias("vertex"))
         .select("vertex", F.lit(1).cast("long").alias("c")),
         k,
-    )
-
-
-def _intersection_contribs(tri_e: DataFrame) -> DataFrame:
-    """Per-vertex (vertex, c) contributions of the adjacency-
-    intersection closure: for each base edge (u, w) with common
-    out-neighbor set _x, u and w each participate in |_x| triangles
-    and every x in _x in one. The three branches re-run the cheap
-    intersect rather than pinning an array-typed intermediate
-    (measured faster in r12 — per-row struct allocation dominates the
-    one-pass shape)."""
-    csize = F.size("_x").cast("long")
-    return (
-        tri_e.select(F.col("u").alias("vertex"), csize.alias("c"))
-        .unionAll(
-            tri_e.select(F.col("w").alias("vertex"), csize.alias("c"))
-        )
-        .unionAll(
-            tri_e.select(
-                F.explode("_x").alias("vertex"),
-                F.lit(1).cast("long").alias("c"),
-            )
-        )
     )
 
 

@@ -1364,7 +1364,7 @@ def bpe_train(
     (syms, freq) rows, exactly the loop real tokenizer trainers run
     single-process over word counts. The 12 distributed rounds at
     sf0.1 were 24 jobs over a 31-row table — ~0.25 s of pure
-    scheduling per round (r13 profile, tools/bpe_profile_r13.py);
+    scheduling per round (r13 profile, OPTIMIZATION_r13.md);
     the driver loop replaces them with one collect. 64Ki rows of
     (short symbol list, count) is a few MB in the driver — the same
     order as a broadcast join's build side. Bit-parity with the

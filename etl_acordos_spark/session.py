@@ -1,10 +1,14 @@
-"""SparkSession factory.
+"""SparkSession factory and session-conf scoping.
 
 The reference runs each pipeline step as a single-threaded pandas process
 under Airflow's LocalExecutor (reference docker-compose.yml:68,
 tasks/bronze.py:43). Here one Spark application owns the whole dataflow:
 the driver plans, executors run partitioned tasks, and all intra-layer
-ordering falls out of lazy evaluation.
+ordering falls out of lazy evaluation. `get_spark` is the one place a
+session is built — tests, ``bench.py``, ``perfbench`` and every
+``tools/*.py`` go through it, so what is timed is what is verified; a
+tool that needs a different shape (``tools/graph_100x.py``'s spill dir,
+zstd and 256 partitions) passes it as ``extra_conf``.
 
 Defaults are chosen for correctness-at-scale first:
   - AQE on (runtime partition coalescing, skew-join splitting, join
@@ -12,18 +16,25 @@ Defaults are chosen for correctness-at-scale first:
   - UTC session timezone so timestamp semantics are stable across the
     cluster and reproducible against external oracles.
   - Arrow enabled for the Python boundary (Pandas UDFs, toPandas).
-  - shuffle partitions default to a local-friendly 32; a real cluster
-    deployment overrides via `extra_conf` (rule of thumb: 2-3x total
-    executor cores, with AQE coalescing the tail).
+  - master ``local[$SPARK_GRAFT_CPUS]`` (default 32) with as many
+    shuffle partitions; a real cluster deployment overrides via
+    `extra_conf` (rule of thumb: 2-3x total executor cores, with AQE
+    coalescing the tail).
+  - an 8 GiB driver heap (``$SPARK_GRAFT_DRIVER_MEM`` overrides).
+
+Operators that need a different runtime conf for one phase (the one-shot
+streaming runs' narrow shuffle width, `one_shot_stream_conf`; a
+partition-overwrite mode) wrap it in `scoped_conf`, which puts the
+session back exactly as it found it.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def get_spark(
@@ -37,17 +48,14 @@ def get_spark(
         master or f"local[{cpus}]"
     )
     conf = {
-        "spark.sql.shuffle.partitions": DEFAULT_SHUFFLE_PARTITIONS,
+        "spark.sql.shuffle.partitions": cpus,
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.ui.enabled": "false",
-        # 48g default for tests/interactive work; bench.py intentionally
-        # pins 8g (bench.py, BASELINE.md neutrality check) so recorded
-        # timings aren't flattered by an oversized driver heap.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         # Files >128MB split into tasks; at 100 TB this keeps scan tasks
         # memory-bounded regardless of file layout.
         "spark.sql.files.maxPartitionBytes": "134217728",
@@ -63,6 +71,45 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set runtime *conf* for the body, then put every key back as it
+    was — re-set if it had a value, unset if it had none — also when
+    the body raises, so no operator leaks a setting into later work on
+    the same long-lived session."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def one_shot_stream_conf(spark: SparkSession) -> dict[str, str]:
+    """`scoped_conf` settings for a one-shot (``availableNow``)
+    streaming run: at most 4 shuffle partitions.
+
+    State-store parallelism = shuffle partitions, fixed at the query's
+    first start, and every state partition pays a per-microbatch commit
+    (checkpoint file write), so for a run over already-present input the
+    partition count is almost pure overhead: measured at sf0.1, 8
+    partitions halve the wall time of 32 and 4 shaves another ~20% (2 is
+    flat vs 4 — state-store open cost dominates below that). A
+    long-running production stream would instead size this once for its
+    key cardinality / throughput and keep it for the checkpoint's
+    lifetime."""
+    return {
+        "spark.sql.shuffle.partitions": str(
+            min(4, spark.sparkContext.defaultParallelism)
+        )
+    }
 
 
 def skew_profile(

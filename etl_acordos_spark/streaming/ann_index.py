@@ -54,6 +54,7 @@ from etl_acordos_spark.operators.simsearch import (
     quantize_mat,
     train_coarse_centroids,
 )
+from etl_acordos_spark.session import one_shot_stream_conf, scoped_conf
 from etl_acordos_spark.streaming.batching import write_id_range_batches
 
 
@@ -211,19 +212,15 @@ def streaming_ann_index_run(
         shutil.rmtree(run_ns, ignore_errors=True)
         os.makedirs(run_ns, exist_ok=True)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_overwrite = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode"
-    )
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
-        )
-        # dynamic mode scopes mode("overwrite") to the partitions a
-        # write actually touches — the idempotent-replay contract
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
+    # dynamic mode scopes mode("overwrite") to the partitions a write
+    # actually touches — the idempotent-replay contract
+    with scoped_conf(
+        spark,
+        {
+            **one_shot_stream_conf(spark),
+            "spark.sql.sources.partitionOverwriteMode": "dynamic",
+        },
+    ):
         if not resume:
             write_id_range_batches(
                 vectors, id_col, [id_col, vec_col], run_ns, src, n_batches
@@ -281,11 +278,6 @@ def streaming_ann_index_run(
             .trigger(availableNow=True)
             .start()
             .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_overwrite
         )
     return run_ns
 

@@ -56,6 +56,7 @@ from etl_acordos_spark.operators.dedup import (
     dedup_batch_against,
     minhash_bands,
 )
+from etl_acordos_spark.session import one_shot_stream_conf, scoped_conf
 from etl_acordos_spark.streaming.batching import write_id_range_batches
 
 
@@ -297,14 +298,7 @@ def streaming_dedup_index_run(
         shutil.rmtree(run_ns, ignore_errors=True)
         os.makedirs(run_ns, exist_ok=True)
 
-    # one-shot sizing, restored on exit (see events.run_stream_to_table)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
-        )
-
+    with scoped_conf(spark, one_shot_stream_conf(spark)):
         # deterministic delivery order: contiguous ascending id ranges,
         # one file per range, one file per trigger — "keep-first" means
         # lower-id batches win, and within a batch the lower id wins
@@ -351,8 +345,6 @@ def streaming_dedup_index_run(
             .start()
             .awaitTermination()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(os.path.join(kept_dir, "b*")).select(id_col)
 
 

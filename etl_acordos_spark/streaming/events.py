@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from etl_acordos_spark.session import one_shot_stream_conf, scoped_conf
+
 #: file-stream schema when events.parquet carries TIMESTAMP(NANOS): with
 #: spark.sql.legacy.parquet.nanosAsLong the raw int64 nanos surface as
 #: LongType (converted to micro TIMESTAMP in stream_events).
@@ -264,21 +266,9 @@ def run_stream_to_table(
     input → deterministic result equal to the batch aggregate.
     """
     spark = stream_df.sparkSession
-    # State-store parallelism = shuffle partitions, fixed at the query's
-    # first start (it's baked into the checkpoint). Every state partition
-    # pays a per-microbatch commit (checkpoint file write), so for a
-    # one-shot availableNow run the partition count is almost pure
-    # overhead: measured at sf0.1, 8 partitions halve the wall time of
-    # 32 and 4 shaves another ~20% (2 is flat vs 4 — state-store open
-    # cost dominates below that). A long-running production stream would
-    # instead size this once for its key cardinality / throughput and
-    # keep it for the checkpoint's lifetime.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(4, spark.sparkContext.defaultParallelism)),
-    )
-    try:
+    # state-store parallelism is baked into the checkpoint at the
+    # query's first start; see one_shot_stream_conf for the sizing
+    with scoped_conf(spark, one_shot_stream_conf(spark)):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -287,8 +277,6 @@ def run_stream_to_table(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -332,22 +320,15 @@ def incremental_upsert_run(
     ckpt = os.path.join(run_ns, "ckpt")
     shutil.rmtree(run_ns, ignore_errors=True)
 
-    # Same one-shot sizing rationale as run_stream_to_table: each batch's
-    # two latest-per-key windows and the snapshot rewrite inherit the
+    # Same one-shot sizing as run_stream_to_table: each batch's two
+    # latest-per-key windows and the snapshot rewrite inherit the
     # session's shuffle partitions — at full width that's dozens of tiny
     # tasks and part-files per microbatch for a snapshot of a few
     # thousand keys. A production deployment sizes this to the key
-    # cardinality; restore on exit.
-    # The try/finally starts at the override itself: the seed write and
-    # stream construction below also run under the narrowed setting, and
-    # an exception anywhere in setup must not leak it into the session.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
-        )
-
+    # cardinality. The scope covers the seed write and stream
+    # construction too, and an exception anywhere in setup must not
+    # leak the narrowed setting into the session.
+    with scoped_conf(spark, one_shot_stream_conf(spark)):
         cols = ["event_id", "user_id", "ts", "value"]
         events.select(*cols).repartition(n_batches).write.parquet(src)
         stream = (
@@ -389,8 +370,6 @@ def incremental_upsert_run(
             .start()
             .awaitTermination()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(lake)
 
 
@@ -457,12 +436,7 @@ def streaming_cms_run(
         shutil.rmtree(run_ns, ignore_errors=True)
         os.makedirs(store)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
-        )
+    with scoped_conf(spark, one_shot_stream_conf(spark)):
         if not resume:
             vals.select("v").repartition(n_batches).write.parquet(src)
         stream = (
@@ -487,8 +461,6 @@ def streaming_cms_run(
             .start()
             .awaitTermination()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.read.parquet(os.path.join(store, "b*"))
         .groupBy("salt", "bucket")
@@ -545,12 +517,7 @@ def streaming_hll_run(
         shutil.rmtree(run_ns, ignore_errors=True)
         os.makedirs(store)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(4, spark.sparkContext.defaultParallelism)),
-        )
+    with scoped_conf(spark, one_shot_stream_conf(spark)):
         cols = [*group_cols, value_col]
         if not resume:
             df.select(*cols).repartition(n_batches).write.parquet(src)
@@ -578,8 +545,6 @@ def streaming_hll_run(
             .start()
             .awaitTermination()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         spark.read.parquet(os.path.join(store, "b*"))
         .groupBy(*group_cols, "bucket")

@@ -17,10 +17,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(
-        app_name="etl_acordos_spark_tests",
-        extra_conf={"spark.driver.memory": "8g"},
-    )
+    spark = get_spark(app_name="etl_acordos_spark_tests")
     yield spark
     spark.stop()
 

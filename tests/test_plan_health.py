@@ -520,35 +520,3 @@ def test_pagerank_auto_demotes_past_vertex_crossover(
     )
     assert seen == [True, True, True], seen
     assert auto_small == auto_big
-
-
-def test_triangle_hybrid_skew_split_matches_other_branches(
-    spark, sf_oracle
-):
-    """r13 skew-split hybrid fallback: whatever the core budget — zero
-    (pure r11 wedge join), small (a genuine split: core middles close
-    by intersection, the rest wedge-join), or effectively unbounded
-    (the whole graph in the core) — the rows must equal the broadcast
-    branch's."""
-    from etl_acordos_spark.operators.graph import triangle_counts
-
-    edges = _graph_edges(spark, sf_oracle)
-    ref = sorted(
-        map(
-            tuple,
-            triangle_counts(edges, k=50, broadcast_edges=True).collect(),
-        )
-    )
-    for cells in (0, 50, 5000, 10**9):
-        got = sorted(
-            map(
-                tuple,
-                triangle_counts(
-                    edges,
-                    k=50,
-                    broadcast_edges=False,
-                    hybrid_core_max_cells=cells,
-                ).collect(),
-            )
-        )
-        assert got == ref, f"hybrid_core_max_cells={cells}"

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_acordos_spark.queries.base import read_events
+from etl_acordos_spark.session import scoped_conf
 from etl_acordos_spark.streaming.events import (
     run_stream_to_table,
     session_stream_agg,
@@ -356,11 +357,9 @@ def test_stream_ann_index_replay_is_idempotent(spark):
     )
     assert len(before) == 40
     # replay batch 1's file through the same writer path
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
+    with scoped_conf(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         import numpy as np
 
         from pyspark.sql import functions as F
@@ -391,8 +390,6 @@ def test_stream_ann_index_replay_is_idempotent(spark):
             .partitionBy("ingest_batch", "cell")
             .parquet(cells)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     after = sorted(
         (r["vec_id"], r["ingest_batch"], r["cell"])
         for r in spark.read.parquet(cells).collect()

@@ -38,20 +38,9 @@ RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
 def main() -> None:
     import math
 
-    from pyspark.sql import SparkSession
+    from etl_acordos_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ann-store-100x")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="ann-store-100x")
     spark.sparkContext.setLogLevel("ERROR")
 
     from tools.scale_smoke import build_scaled_dir

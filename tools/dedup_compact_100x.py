@@ -60,22 +60,11 @@ def _store_stats(run_ns: str) -> dict:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dedup-compact-100x")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from etl_acordos_spark.session import get_spark
+
+    spark = get_spark(app_name="dedup-compact-100x")
     spark.sparkContext.setLogLevel("ERROR")
 
     from tools.scale_smoke import build_scaled_dir

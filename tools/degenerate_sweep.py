@@ -50,10 +50,7 @@ def main() -> None:
 
     from etl_acordos_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="degenerate_sweep",
-        extra_conf={"spark.driver.memory": "8g"},
-    )
+    spark = get_spark(app_name="degenerate_sweep")
     import __spark_entry__ as entry_mod
 
     regs = entry_mod.queries()

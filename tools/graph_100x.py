@@ -61,26 +61,22 @@ def _plan(df) -> str:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from etl_acordos_spark.session import get_spark
 
     which = set(sys.argv[1:]) or {"pagerank", "triangle"}
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("graph-100x")
-        .config("spark.driver.memory", DRIVER_MEM)
-        .config("spark.sql.shuffle.partitions", SHUFFLE_PARTS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.local.dir", "/tmp/spark_graft_spill_100x")
-        # the wedge shuffle is ~98 GiB raw at 100x: zstd (vs the lz4
-        # default) roughly halves the on-disk shuffle footprint — the
-        # standard cluster setting for shuffle-heavy graph jobs — and
-        # compressed checkpoints shrink the serialized edge pins
-        .config("spark.io.compression.codec", "zstd")
-        .config("spark.checkpoint.compress", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="graph-100x",
+        extra_conf={
+            "spark.driver.memory": DRIVER_MEM,
+            "spark.sql.shuffle.partitions": SHUFFLE_PARTS,
+            "spark.local.dir": "/tmp/spark_graft_spill_100x",
+            # the wedge shuffle is ~98 GiB raw at 100x: zstd (vs the lz4
+            # default) roughly halves the on-disk shuffle footprint — the
+            # standard cluster setting for shuffle-heavy graph jobs — and
+            # compressed checkpoints shrink the serialized edge pins
+            "spark.io.compression.codec": "zstd",
+            "spark.checkpoint.compress": "true",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -142,16 +138,12 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         t_total = time.perf_counter() - t0
         # the demotion contract (tests/test_plan_health.py, BASELINE
-        # r11, amended r13): ShuffledHashJoin wedge probes, no
-        # SortMergeJoin (its wedge sort is the 79 GiB disk overrun).
-        # BroadcastHashJoin nodes MAY appear in the demoted plan when
-        # the r13 skew-split hybrid is enabled (hybrid_core_max_cells
-        # > 0: core-adjacency attach + anti-joins, budget-capped by
-        # construction) — so broadcast presence is reported, not
-        # asserted against.
+        # r11): ShuffledHashJoin wedge probes, no SortMergeJoin (its
+        # wedge sort is the 79 GiB disk overrun), no broadcast wedge
         demoted = (
             "ShuffledHashJoin" in plan
             and "SortMergeJoin" not in plan
+            and "BroadcastHashJoin" not in plan
         )
         results["triangle_auto"] = {
             "t_100x": round(t_total, 3),

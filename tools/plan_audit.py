@@ -23,8 +23,8 @@ Queries that execute eagerly in their builder (streaming runs, iterative
 graph/cluster loops) are still audited — the captured plan is the final
 frame's; their cost shape lives in the builder and is reviewed by hand.
 
-The session mirrors bench.py (local[$SPARK_GRAFT_CPUS], shuffle
-partitions = CPUS, AQE on) so captured plans match what the bench runs.
+The session comes from the engine's factory (`get_spark`), the same one
+bench.py times, so captured plans match what the bench runs.
 Plans are captured BEFORE execution where the builder is lazy, i.e.
 `isFinalPlan=false` AQE headers are expected.
 """
@@ -45,7 +45,6 @@ for p in (_REPO_ROOT, os.path.join(_REPO_ROOT, "tests")):
         sys.path.insert(0, p)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def explain_formatted(df) -> str:
@@ -84,19 +83,9 @@ def main() -> None:
     ap.add_argument("keys", nargs="*")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from etl_acordos_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("plan-audit-r12")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="plan-audit-r12")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as contract

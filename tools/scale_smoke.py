@@ -166,20 +166,10 @@ def build_scaled_dir(spark) -> None:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from etl_acordos_spark.session import get_spark
 
     keys = sys.argv[1:] or DEFAULT_KEYS
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-smoke")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     build_scaled_dir(spark)
 

@@ -63,10 +63,7 @@ TABLES = (
 def _spark():
     from etl_acordos_spark.session import get_spark
 
-    return get_spark(
-        app_name="skew_tile",
-        extra_conf={"spark.driver.memory": "8g"},
-    )
+    return get_spark(app_name="skew_tile")
 
 
 def build(spark) -> None:

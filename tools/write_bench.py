@@ -36,7 +36,6 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
 OUT_BASE = os.environ.get(
     "SPARK_GRAFT_WRITE_BENCH_DIR", "/tmp/spark_graft_write_bench"
@@ -44,18 +43,11 @@ OUT_BASE = os.environ.get(
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("write-bench")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from etl_acordos_spark.session import get_spark
+
+    spark = get_spark(app_name="write-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     from etl_acordos_spark.operators.layout import (
