@@ -63,7 +63,7 @@ def decode_real(payload: bytes) -> dict:
     )
 
 
-def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payloads: two
     content identities plus REAL decoded image features — the stdlib PNG
     codec (`functions/png.py`, the one decode implementation) runs
@@ -81,7 +81,7 @@ def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFra
       double — exact in any engine, no float-rounding drift.
 
     mapInPandas keeps partitioning intact (no shuffle); each Python
-    worker sees whole Arrow batches. *batch_hint* documents where
+    worker sees whole Arrow batches.
     `spark.sql.execution.arrow.maxRecordsPerBatch` bounds peak memory
     when payloads are large (set it session-wide for real media).
     """

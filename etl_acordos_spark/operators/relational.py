@@ -23,7 +23,6 @@ from etl_acordos_spark.functions.hashing import unit_hash_open
 def star_join(
     fact: DataFrame,
     dims: list[tuple[DataFrame, Column | str]],
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Join a fact table with N dimension tables (equi-joins).
 
@@ -33,8 +32,7 @@ def star_join(
     """
     out = fact
     for dim, cond in dims:
-        d = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(d, on=cond, how="inner")
+        out = out.join(F.broadcast(dim), on=cond, how="inner")
     return out
 
 

@@ -287,29 +287,11 @@ def bitext_margin_pairs(
 
 _PLANE_SEED = 20240801
 
-
-def _sign_lsh_udf(tables: int, bits: int, dim: int):
-    """Vectorized multi-table sign-LSH signature UDF.
-
-    The hyperplane matrix is a CONSTANT (dim × tables·bits), so it is
-    built once driver-side from a fixed numpy RandomState (bit-stable
-    across platforms) and shipped in the UDF closure; each Arrow batch
-    is one (n × dim) @ (dim × tables·bits) matmul + sign + bit-pack —
-    the textbook Pandas-UDF fast path, vs. re-deriving the planes per
-    row in interpreted Catalyst lambdas."""
-    planes = np.random.RandomState(_PLANE_SEED).standard_normal(
-        (dim, tables * bits)
-    )
-    powers = 1 << np.arange(bits)
-
-    @F.pandas_udf("array<int>")
-    def sigs(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())[:, :dim].astype(np.float64)
-        signs = (mat @ planes) > 0.0
-        packed = (signs.reshape(len(mat), tables, bits) * powers).sum(axis=2)
-        return pd.Series(list(packed.astype(np.int32)))
-
-    return sigs
+# The one integer grid of the exact-integer ANN paths (`ann_topk_lsh`,
+# `ivfpq_topk`) and of their DuckDB oracles: a power of two, so x·Q is
+# exact for float32 inputs, and its 2^-20 step sits ~5 orders below the
+# intra-cluster spread the recall floors are measured on.
+QUANT_SCALE = 1 << 20
 
 
 def quantize_signed(mat: np.ndarray, q: int) -> np.ndarray:
@@ -322,19 +304,24 @@ def quantize_signed(mat: np.ndarray, q: int) -> np.ndarray:
     )
 
 
-def _sign_lsh_quantized_udf(tables: int, bits: int, dim: int, q: int):
-    """The exact-integer twin of `_sign_lsh_udf`: vectors AND the
-    hyperplane constants quantize to signed int64 grids, the signature
-    bit is ``(int dot > 0)`` — order-free integer arithmetic, so the
-    bucket structure is ANSI-SQL replayable (`ext_simsearch_ann`'s
-    oracle embeds the same quantized planes as literals). Sign ties
-    (dot == 0) go to bit 0 on both sides."""
-    pint = lsh_planes_int(tables, bits, dim, q)
+def _sign_lsh_quantized_udf(tables: int, bits: int, dim: int):
+    """Vectorized multi-table sign-LSH signature UDF over exact
+    integers: vectors AND the hyperplane constants quantize to signed
+    int64 grids (`QUANT_SCALE`), and the signature bit is
+    ``(int dot > 0)``. Order-free integer arithmetic makes the bucket
+    structure ANSI-SQL replayable (`ext_simsearch_ann`'s oracle embeds
+    the same quantized planes as literals). Sign ties (dot == 0) go to
+    bit 0 on both sides. The plane matrix is a CONSTANT, built once
+    driver-side and shipped in the closure; each Arrow batch is one
+    integer matmul + sign + bit-pack."""
+    pint = lsh_planes_int(tables, bits, dim)
     powers = 1 << np.arange(bits)
 
     @F.pandas_udf("array<int>")
     def sigs(vecs: pd.Series) -> pd.Series:
-        mat = quantize_signed(np.stack(vecs.to_numpy())[:, :dim], q)
+        mat = quantize_signed(
+            np.stack(vecs.to_numpy())[:, :dim], QUANT_SCALE
+        )
         signs = (mat @ pint) > 0
         packed = (signs.reshape(len(mat), tables, bits) * powers).sum(axis=2)
         return pd.Series(list(packed.astype(np.int32)))
@@ -342,14 +329,16 @@ def _sign_lsh_quantized_udf(tables: int, bits: int, dim: int, q: int):
     return sigs
 
 
-def lsh_planes_int(tables: int, bits: int, dim: int, q: int) -> np.ndarray:
+def lsh_planes_int(tables: int, bits: int, dim: int) -> np.ndarray:
     """The quantized hyperplane constants `_sign_lsh_quantized_udf`
     uses — exposed so the oracle generator embeds the IDENTICAL ints
-    as SQL literals (one shared computation, no reimplementation)."""
+    as SQL literals (one shared computation, no reimplementation). The
+    planes come from a fixed numpy RandomState, bit-stable across
+    platforms."""
     planes = np.random.RandomState(_PLANE_SEED).standard_normal(
         (dim, tables * bits)
     )
-    return quantize_signed(planes, q)
+    return quantize_signed(planes, QUANT_SCALE)
 
 
 def assign_cell_udf(centroids: np.ndarray):
@@ -566,10 +555,11 @@ def ivf_topk(
     int64 grids, ties to the lowest cell), so candidate membership is
     ANSI-SQL replayable and the final exact cosine re-rank makes the
     whole query hash-verifiable (`ext_simsearch_ivf`'s DuckDB oracle
-    unrolls it). The float spherical path stays the production default
-    (BLAS matmuls, cosine-shaped cells); quantized-vs-float recall
-    parity on the adversarial fixture is pinned in
-    tests/test_simsearch.py.
+    unrolls it). The float spherical path stays: it is the only path
+    for vectors outside [-1, 1] (`quantize_mat` raises there), such as
+    the unscaled hub corpus and the streaming store's float mode;
+    quantized-vs-float recall parity on the rescaled adversarial
+    fixture is pinned in tests/test_simsearch.py.
     """
     qrow = df.filter(F.col(id_col) == query_id).select(as_double(vec_col)).head()
     if qrow is None:
@@ -755,7 +745,12 @@ def pq_topk(
     scan (integer squared-L2 over the unit sphere, the Faiss METRIC_L2
     cosine workaround) — is order-free int64, so the shortlist and the
     whole query hash-verify against `ext_simsearch_pq`'s DuckDB oracle.
-    The float IP-ADC path stays the production default.
+
+    The float IP-ADC path stays the default because the integer one
+    loses recall at scale: on the 20× jittered tile
+    (`test_ann_recall_floors_at_20x_scale`, refine=16) integer PQ
+    recalls 5/10 against float's 10/10, below that test's floor of 7;
+    at sf0.01 with default knobs it is 8/10 against 10/10.
 
     At 100 TB the codes ARE the stored scan column (m bytes/vector vs
     dim·4), codebooks are kilobytes shipped in the UDF closure, and both
@@ -932,23 +927,32 @@ def ivfpq_topk(
     train_n: int = 256,
     refine: int = 8,
     n_iter: int = 5,
-    quantize: int | None = None,
 ) -> DataFrame:
     """IVF-PQ composite ANN — the standard billion-scale vector-index
     layout (Jégou et al., "Product Quantization for Nearest Neighbor
     Search", TPAMI 2011; Faiss ``IndexIVFPQ``): the coarse quantizer
     prunes the scan to ``n_probe/n_lists`` of the corpus, product-
-    quantized RESIDUALS (normalized vector − its cell centroid)
-    compress what remains ~16×, ADC scores codes without ever
-    decompressing, and exact cosine re-ranks only the ``k·refine``
-    shortlist.
+    quantized RESIDUALS (vector − its cell centroid) compress what
+    remains ~16×, ADC scores codes without ever decompressing, and
+    exact cosine re-ranks only the ``k·refine`` shortlist.
 
     Residual encoding is what makes the composite beat raw PQ: within
     a cell the residuals span a much smaller ball than the raw
     vectors, so the same ``m × ks`` codebook budget quantizes finer.
-    The decomposition is exact — with unit centroids ``c`` and
-    normalized vectors ``vn``, ``qn·vn = qn·c[cell] + qn·(vn −
-    c[cell])`` — so ADC error comes only from quantizing the residual.
+
+    One arithmetic, exact integers: all geometry lives on the
+    quantized-NORMALIZED grid (`unit_clamped_np`, then `quantize_mat`
+    at `QUANT_SCALE`). Normalizing and clamping first puts any finite
+    input in the [-1, 1] quantize domain, unscaled vectors included.
+    Coarse cells come from integer Lloyd over the id-prefix sample;
+    residuals shift +2Q into the positive domain (Lloyd means divide —
+    negative operands would split flooring vs truncating engines);
+    residual codebooks come from `_pq_train_codebooks_int`; and a
+    per-probed-cell integer squared-L2 LUT scores ``||(q−c) − r̂||²``.
+    Every approximate choice (cells, probes, codes, shortlist) is then
+    bit-deterministic, and the whole query hash-verifies against
+    `ext_simsearch_ivfpq`'s DuckDB oracle, which replays it
+    CTE-for-CTE.
 
     Scale shape (the point of the composite at 100 TB):
 
@@ -963,9 +967,8 @@ def ivfpq_topk(
     - the probe filters on ``cell`` BEFORE any scoring, so the ADC
       scan touches ~n_probe/n_lists of the rows (with a cell-
       partitioned store this is partition pruning, not a filter);
-    - per-cell query constants ``qn·c`` fold into the score as a tiny
-      CASE over the n_probe probed cells; the only shuffle is the
-      k·refine TakeOrdered.
+    - the per-cell query constant is built into each probed cell's
+      LUT; the only shuffle is the k·refine TakeOrdered.
 
     ``refine`` defaults higher than `pq_topk`'s (8 vs 4): residual
     codebooks are trained on ``train_n`` rows SPLIT across cells, so
@@ -973,137 +976,9 @@ def ivfpq_topk(
     re-rank shortlist needs more slack; measured at sf0.01 this
     reaches the IVF pruning ceiling (neighbors outside the probed
     cells are unreachable by construction) while the shortlist stays
-    k·refine rows — driver-trivial at any corpus size.
-
-    Approximate by design, but the registry key runs the quantized
-    exact-integer variant and hash-verifies against a full DuckDB
-    oracle (cell argmin + ADC replayed as integer CTEs); recall is
-    unit-tested against `exact_topk` at floors at least as tight as
-    the IVF and PQ singles (tests/test_operators.py).
-
-    With *quantize* = Q the composite runs the exact shifted-integer
-    variant (`_ivfpq_topk_quantized`): quantized-normalized coarse
-    cells, shifted-positive integer residuals, integer residual
-    codebooks and per-probed-cell integer L2-ADC — ascending
-    ``||(q−c) − r̂||²`` is the same decomposition the float path
-    expresses as ``qn·c + qn·r̂`` — so the whole query hash-verifies
-    against `ext_simsearch_ivfpq`'s DuckDB oracle. The float path
-    stays the production default."""
-    if quantize:
-        return _ivfpq_topk_quantized(
-            df, query_id, id_col, vec_col, k, n_lists, n_probe,
-            m, ks, train_n, refine, n_iter, quantize,
-        )
-    rows = (
-        df.select(as_double(vec_col))
-        .orderBy(id_col)
-        .limit(max(train_n, 4 * n_lists))
-        .collect()
-    )
-    S = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    C = train_coarse_centroids(df, id_col, vec_col, n_lists, sample=S)
-    Cn = C / _safe_norms(C)
-    Sn = S[:train_n] / _safe_norms(S[:train_n])
-    books = _pq_train_codebooks(
-        Sn - Cn[np.argmax(Sn @ Cn.T, axis=1)], m, ks, n_iter
-    )
-    dim = S.shape[1]
-    dsub = dim // m
-
-    @F.pandas_udf("struct<cell:int,codes:array<int>>")
-    def encode(vecs: pd.Series) -> pd.DataFrame:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        mat = mat / _safe_norms(mat)
-        cells = np.argmax(mat @ Cn.T, axis=1)
-        res = mat - Cn[cells]
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            X = res[:, j * dsub : (j + 1) * dsub]
-            d2 = ((X[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.argmin(d2, axis=1)
-        return pd.DataFrame(
-            {"cell": cells.astype(np.int32), "codes": list(codes)}
-        )
-
-    qrow = (
-        df.filter(F.col(id_col) == query_id).select(as_double(vec_col)).head()
-    )
-    if qrow is None:
-        raise ValueError(
-            f"ivfpq_topk: query id {query_id!r} not found in {id_col!r}"
-        )
-    q = np.asarray(qrow[0], dtype=np.float64)
-    q_norm = float(np.linalg.norm(q))
-    if q_norm == 0.0:
-        raise ValueError(
-            f"ivfpq_topk: query vector {query_id!r} has zero norm — "
-            "cosine undefined"
-        )
-    qn = q / q_norm
-    probe = probe_cells(C, qn, n_probe)
-    # shared residual LUT (codebooks are cell-independent) + per-probed-
-    # cell constant qn·c — together the exact ADC decomposition above
-    lut = np.stack(
-        [books[j] @ qn[j * dsub : (j + 1) * dsub] for j in range(m)]
-    )
-    cell_const = {c: float(qn @ Cn[c]) for c in probe}
-
-    @F.pandas_udf("double")
-    def adc_residual(codes: pd.Series) -> pd.Series:
-        Cm = np.stack(codes.to_numpy())
-        return pd.Series(lut[np.arange(m), Cm].sum(axis=1))
-
-    const_expr = F.lit(0.0)
-    for c, v in cell_const.items():
-        const_expr = F.when(F.col("cell") == c, F.lit(v)).otherwise(
-            const_expr
-        )
-
-    encoded = df.select(
-        F.col(id_col).alias("id"),
-        as_double(vec_col).alias("v"),
-        encode(as_double(vec_col)).alias("e"),
-    ).select("id", "v", F.col("e.cell").alias("cell"), F.col("e.codes").alias("codes"))
-    shortlist = (
-        encoded.filter(F.col("cell").isin(probe))
-        .filter(F.col("id") != query_id)
-        .withColumn("approx_ip", const_expr + adc_residual(F.col("codes")))
-        .orderBy(F.col("approx_ip").desc(), F.col("id").asc())
-        .limit(k * refine)
-    )
-    qcol = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
-    return (
-        shortlist.withColumn("q", qcol)
-        .withColumn("cosine", F.round(cosine("v", "q"), 6))
-        .orderBy(F.col("cosine").desc(), F.col("id").asc())
-        .limit(k)
-        .select(F.col("id").alias("vec_id"), "cosine")
-    )
-
-
-def _ivfpq_topk_quantized(
-    df: DataFrame,
-    query_id: int,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_lists: int,
-    n_probe: int,
-    m: int,
-    ks: int,
-    train_n: int,
-    refine: int,
-    n_iter: int,
-    q_scale: int,
-) -> DataFrame:
-    """The exact shifted-integer IVF-PQ twin (see `ivfpq_topk`). All
-    geometry lives on the quantized-NORMALIZED grid (the `unit_clamped`
-    + quantize seam): coarse cells via integer Lloyd over the id-prefix
-    sample, residuals shifted +2Q into the positive domain (Lloyd means
-    divide — negative operands would split flooring vs truncating
-    engines), residual codebooks via `_pq_train_codebooks_int`, and a
-    per-probed-cell integer squared-L2 LUT. Replayed CTE-for-CTE by
-    `ext_simsearch_ivfpq`'s oracle."""
+    k·refine rows — driver-trivial at any corpus size. Recall is
+    unit-tested against `exact_topk` (tests/test_operators.py,
+    tests/test_simsearch.py, tests/test_scale_paths.py)."""
     base = df.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
     qrow = base.filter(F.col("id") == query_id).select("v").head()
     if qrow is None:
@@ -1126,19 +1001,19 @@ def _ivfpq_topk_quantized(
         np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
     )
     # coarse quantizer: integer Lloyd over the (already normalized,
-    # already clamped) sample — pass it through so the quantize branch
-    # sees the same grid the corpus UDF will
+    # already clamped) sample — passed through so training sees the
+    # same grid the corpus UDF will
     C = train_coarse_centroids(
-        df, id_col, vec_col, n_lists, sample=U, quantize=q_scale
+        df, id_col, vec_col, n_lists, sample=U, quantize=QUANT_SCALE
     )
-    Uq = quantize_mat(U[:train_n], q_scale)
-    shift = np.int64(2 * q_scale)
+    Uq = quantize_mat(U[:train_n], QUANT_SCALE)
+    shift = np.int64(2 * QUANT_SCALE)
     tcells = np.argmin(_int_rel_sq_dists(Uq, C), axis=1)
     books = _pq_train_codebooks_int(Uq - C[tcells] + shift, m, ks, n_iter)
     dim = Uq.shape[1]
     dsub = dim // m
 
-    qq = quantize_mat(unit_clamped_np(qv[None, :]), q_scale)[0]
+    qq = quantize_mat(unit_clamped_np(qv[None, :]), QUANT_SCALE)[0]
     probe = probe_cells_quantized(C, qq, n_probe)
     # per-probed-cell LUT: integer squared-L2 between the query's
     # cell-residual and each codeword — ascending sums rank candidates
@@ -1158,7 +1033,7 @@ def _ivfpq_topk_quantized(
     @F.pandas_udf("struct<cell:int,codes:array<int>>")
     def encode_q(vecs: pd.Series) -> pd.DataFrame:
         mat = quantize_mat(
-            unit_clamped_np(np.stack(vecs.to_numpy())), q_scale
+            unit_clamped_np(np.stack(vecs.to_numpy())), QUANT_SCALE
         )
         cells = np.argmin(_int_rel_sq_dists(mat, C), axis=1)
         res = mat - C[cells] + shift
@@ -1211,19 +1086,19 @@ def ann_topk_lsh(
     tables: int = 12,
     bits: int = 6,
     dim: int = 64,
-    quantize: int | None = None,
 ) -> DataFrame:
     """Approximate top-k via multi-table sign-LSH: a vector is a
     candidate iff it collides with the query's full signature in at
     least one of *tables* independent tables; exact cosine re-ranks
     candidates only.
 
-    With *quantize* = Q the signatures come from exact integer dot
-    products against quantized planes (`_sign_lsh_quantized_udf`) —
-    the bucket structure is then bit-deterministic and the whole query
-    hash-verifies against `ext_simsearch_ann`'s DuckDB oracle (same
-    quantized planes as literals). The float matmul path stays the
-    production default.
+    One arithmetic, exact integers: signatures come from integer dot
+    products of `QUANT_SCALE`-quantized vectors against quantized
+    planes (`_sign_lsh_quantized_udf`). Signed products and sums never
+    divide, so no domain guard applies and unscaled vectors work as
+    they are. The bucket structure is bit-deterministic, and the whole
+    query hash-verifies against `ext_simsearch_ann`'s DuckDB oracle
+    (same quantized planes as literals).
 
     Recall/cost dial: per-neighbor recall ≈ 1-(1-p^bits)^tables with
     p = 1 - θ/π; expected random-candidate fraction ≈ tables/2^bits
@@ -1231,11 +1106,7 @@ def ann_topk_lsh(
     at 100 TB raise `bits` and `tables` together to cut the candidate
     fraction while holding recall). The bucket join shuffles (table,
     signature) ints — never the vectors of non-candidates."""
-    sig_udf = (
-        _sign_lsh_quantized_udf(tables, bits, dim, quantize)
-        if quantize
-        else _sign_lsh_udf(tables, bits, dim)
-    )
+    sig_udf = _sign_lsh_quantized_udf(tables, bits, dim)
     sigs = df.select(
         F.col(id_col).alias("id"),
         as_double(vec_col).alias("v"),

@@ -388,88 +388,17 @@ def decontaminate(
     text_col: str,
     id_col: str,
     ngram: int = 4,
-    hashed: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination: flag every training document sharing
     at least one word *ngram*-gram with the (much smaller) evaluation
     set. Output: (id, n_shared_ngrams) for contaminated docs only.
 
     The eval side's distinct grams are broadcast — the training corpus
-    never shuffles. *hashed=True* is the at-scale form: grams become
-    xxhash64 longs computed straight from the token array
-    (dedup.hashed_word_shingles) — no shingle strings materialize, the
-    grams broadcast as ONE sorted numpy array, and the per-doc probe is
-    a vectorized `np.isin` (binary search) in map-only mapInPandas:
-    zero explode, zero join, zero shuffle. Default stays string grams
-    for oracle parity (xxhash64 has no DuckDB equivalent); results are
-    identical up to ~2^-64 hash collisions.
+    never shuffles. Grams stay strings so the DuckDB oracle replays
+    them exactly; the constant-memory at-scale form is
+    `bloom_decontaminate`.
     """
-    from etl_acordos_spark.operators.dedup import (
-        hashed_word_shingles,
-        word_shingles,
-    )
-
-    if hashed:
-        ev_rows = (
-            eval_docs.select(
-                F.split(F.col(text_col), " ").alias("tok")
-            )
-            .select(hashed_word_shingles("tok", ngram).alias("gs"))
-            .collect()
-        )
-        ev = np.sort(
-            np.unique(
-                np.fromiter(
-                    (g for r in ev_rows for g in r["gs"]), dtype=np.int64
-                )
-            )
-        )
-        ev_bc = train.sparkSession.sparkContext.broadcast(ev)
-
-        def probe(batches):
-            E = ev_bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                # NULL text → NULL gram array; drop to empty (no hits)
-                # to match the string-gram path's explode semantics
-                # instead of crashing np.asarray on None
-                arrays = [
-                    np.asarray(
-                        gs if gs is not None else [], dtype=np.int64
-                    )
-                    for gs in pdf["gs"]
-                ]
-                lens = np.fromiter(
-                    (a.size for a in arrays), dtype=np.int64,
-                    count=len(arrays),
-                )
-                # one batch-wide membership test + segmented sums —
-                # no per-document Python work
-                flat_hits = np.isin(np.concatenate(arrays), E)
-                starts = np.zeros(len(arrays), dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                hits = np.add.reduceat(
-                    np.append(flat_hits, False), starts
-                )[: len(arrays)]
-                hits[lens == 0] = 0
-                flagged = hits > 0
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col][flagged],
-                        "n_shared_ngrams": hits[flagged].astype(np.int64),
-                    }
-                )
-
-        return (
-            train.select(
-                F.col(id_col), F.split(F.col(text_col), " ").alias("tok")
-            )
-            .select(id_col, hashed_word_shingles("tok", ngram).alias("gs"))
-            .mapInPandas(
-                probe, schema=f"{id_col} bigint, n_shared_ngrams bigint"
-            )
-        )
+    from etl_acordos_spark.operators.dedup import word_shingles
 
     def grams(df: DataFrame) -> DataFrame:
         tok = df.select(
@@ -495,7 +424,6 @@ def boilerplate_ngrams(
     id_col: str,
     ngram: int = 3,
     min_doc_frac: float = 0.01,
-    hashed: bool = False,
 ) -> DataFrame:
     """Corpus-boilerplate detection: the word *ngram*-grams present in
     at least *min_doc_frac* of documents — headers, footers, license
@@ -508,23 +436,15 @@ def boilerplate_ngrams(
     aggregation collapses each map task to its local gram counts before
     the shuffle, so the exchange carries O(distinct grams · tasks), not
     O(total gram instances). The corpus doc count joins in as a lazy
-    1-row cross join (no driver action). *hashed=True* is the at-scale
-    form (grams as xxhash64 longs, no strings shuffled — same contract
-    as `decontaminate(hashed=True)`); the flagged gram set is identical
-    up to ~2^-64 collisions, but the gram column is then a long, so the
-    string form stays the oracle."""
-    from etl_acordos_spark.operators.dedup import (
-        hashed_word_shingles,
-        word_shingles,
-    )
+    1-row cross join (no driver action)."""
+    from etl_acordos_spark.operators.dedup import word_shingles
 
-    shingles = hashed_word_shingles if hashed else word_shingles
     tok = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("tok"))
     # cache the shingle ARRAYS before the explode — exploding the
     # interpreted-HOF shingle expression re-evaluates the whole array
     # per output row (see README's explode-over-HOF note)
     gram_arrays = tok.select(
-        F.col(id_col), shingles("tok", ngram).alias("gs")
+        F.col(id_col), word_shingles("tok", ngram).alias("gs")
     ).cache()
     doc_grams = gram_arrays.select(
         F.col(id_col), F.explode("gs").alias("gram")
@@ -983,8 +903,8 @@ def bloom_decontaminate(
     rate ~(k·n/m)^k, zero false negatives; callers route flagged docs
     to the exact re-check).
 
-    Why this exists next to `decontaminate(hashed=True)`: the exact
-    path broadcasts one long per eval gram, so its executor footprint
+    Why this exists next to `decontaminate`: the exact path
+    broadcasts every distinct eval gram, so its executor footprint
     grows with the eval suite; the Bloom bitset is a FIXED m_bits/8
     bytes (512 KiB at the default) no matter how many benchmarks are
     folded in — and the 100 TB train scan still never shuffles.

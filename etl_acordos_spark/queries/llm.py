@@ -35,6 +35,7 @@ from etl_acordos_spark.operators.cluster import (
     semantic_dedup_keep,
 )
 from etl_acordos_spark.operators.simsearch import (
+    QUANT_SCALE,
     ann_topk_lsh,
     cosine_pairs,
     exact_topk,
@@ -388,16 +389,13 @@ def q_ext_quantize_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ext_simsearch_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH approximate top-10 for vec_id=0: 12 tables × 6-bit
     signatures, bucket-collision candidates, exact re-rank within
-    candidates only. Runs the exact-integer signature variant
-    (quantize=2^20): signed integer dots against quantized planes make
-    the bucket structure bit-deterministic, so the whole query
-    hash-verifies against `_lsh_oracle` (the same plane ints embedded
-    as SQL literals via lsh_planes_int). The float matmul path stays
-    the production default; recall parity pinned on the adversarial
+    candidates only. `ann_topk_lsh` has one arithmetic: signed integer
+    dots at QUANT_SCALE against quantized planes make the bucket
+    structure bit-deterministic, so the whole query hash-verifies
+    against `_lsh_oracle` (the same plane ints embedded as SQL literals
+    via lsh_planes_int). Recall floors are pinned on the adversarial
     fixture (tests/test_simsearch.py)."""
-    return ann_topk_lsh(
-        t(spark, sf_dir, "embeddings"), query_id=0, k=10, quantize=1 << 20
-    )
+    return ann_topk_lsh(t(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
 
 def q_ext_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -437,17 +435,14 @@ def q_ext_simsearch_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan to the 4 probed ones, residual product quantization (16×32)
     compresses the survivors, ADC scores codes, exact cosine re-ranks
     the 80-id shortlist — the standard billion-scale layout (Faiss
-    IndexIVFPQ). Runs the exact shifted-integer variant
-    (quantize=2^20): quantized-normalized coarse cells, +2Q-shifted
-    integer residuals, integer codebooks and per-probed-cell integer
-    L2-ADC — the whole composite hash-verifies against `_ivfpq_oracle`
-    (coarse `_lloyd_ctes` + prefixed `_pq_codebook_ctes` + verified
-    cosine re-rank). The float path stays the production default;
-    recall floors ≥ the IVF and PQ singles stay unit-tested against
-    exact_topk."""
-    return ivfpq_topk(
-        t(spark, sf_dir, "embeddings"), query_id=0, k=10, quantize=1 << 20
-    )
+    IndexIVFPQ). `ivfpq_topk` has one arithmetic, exact shifted
+    integers at QUANT_SCALE: quantized-normalized coarse cells,
+    +2Q-shifted integer residuals, integer codebooks and
+    per-probed-cell integer L2-ADC — the whole composite hash-verifies
+    against `_ivfpq_oracle` (coarse `_lloyd_ctes` + prefixed
+    `_pq_codebook_ctes` + verified cosine re-rank). Recall floors ≥ the
+    IVF and PQ singles stay unit-tested against exact_topk."""
+    return ivfpq_topk(t(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
 
 # ---------------------------------------------------- clustering / semantic
@@ -786,12 +781,11 @@ def _ivfpq_oracle(
     train_n: int = 256,
     refine: int = 8,
     n_iter: int = 5,
-    q: int = 1 << 20,
     query_id: int = 0,
     coarse_iter: int = 4,
 ) -> str:
-    """Exact DuckDB replay of the quantized IVF-PQ composite
-    (operators/simsearch.py::ivfpq_topk with quantize=Q): the quantized
+    """Exact DuckDB replay of the IVF-PQ composite
+    (operators/simsearch.py::ivfpq_topk, Q = QUANT_SCALE): the quantized
     -normalized grid feeds the coarse `_lloyd_ctes` chain (id-prefix
     sample, 4 rounds — train_coarse_centroids' default), `_assign_cte`
     places the corpus, residuals shift +2Q into the positive domain,
@@ -799,11 +793,11 @@ def _ivfpq_oracle(
     and a per-probed-cell integer L2 LUT scores only candidate-cell
     rows; the verified exact-cosine re-rank closes. Every approximate
     choice (cells, probes, codes, shortlist) is bit-deterministic."""
-    shift = 2 * q
+    shift = 2 * QUANT_SCALE
     cn = f"c{coarse_iter}"
     pn = f"pcb{n_iter}"
     return (
-        "WITH " + _unit_quantized_vecs_cte(q) + ","
+        "WITH " + _unit_quantized_vecs_cte(QUANT_SCALE) + ","
         " va AS MATERIALIZED (SELECT id, w AS v FROM vq),"
         f" csamp AS (SELECT id, v FROM va ORDER BY id LIMIT {4 * n_lists}),"
         + _lloyd_ctes("csamp", n_lists, coarse_iter)
@@ -853,11 +847,10 @@ def _lsh_oracle(
     tables: int = 12,
     bits: int = 6,
     dim: int = 64,
-    q: int = 1 << 20,
     query_id: int = 0,
 ) -> str:
-    """Exact DuckDB replay of the quantized sign-LSH query
-    (operators/simsearch.py::ann_topk_lsh with quantize=Q): vectors and
+    """Exact DuckDB replay of the sign-LSH query
+    (operators/simsearch.py::ann_topk_lsh, Q = QUANT_SCALE): vectors and
     the hyperplane constants both map to SIGNED integer grids (no shift
     — nothing divides; signed products/sums are exact everywhere), the
     signature bit is ``(integer dot > 0)``, tables pack bits as sums of
@@ -867,7 +860,7 @@ def _lsh_oracle(
     two sides cannot drift."""
     from etl_acordos_spark.operators.simsearch import lsh_planes_int
 
-    pint = lsh_planes_int(tables, bits, dim, q)
+    pint = lsh_planes_int(tables, bits, dim)
     # one literal row per plane: (pb, [the plane's dim components])
     rows = ", ".join(
         f"({pb}, [{','.join(str(int(x)) for x in pint[:, pb])}])"
@@ -876,7 +869,8 @@ def _lsh_oracle(
     return (
         f"WITH pvec AS (SELECT pb, pw FROM (VALUES {rows}) t(pb, pw)),"
         " vq AS (SELECT vec_id AS id, list_transform(embedding,"
-        f"  x -> CAST(floor(CAST(x AS DOUBLE) * {q}.0 + 0.5) AS BIGINT)) AS w"
+        f"  x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT_SCALE}.0 + 0.5)"
+        " AS BIGINT)) AS w"
         "  FROM embeddings),"
         " dt AS (SELECT id, pb, list_sum(list_transform("
         "   range(1, len(w) + 1), i -> w[i] * pw[i])) AS dot"

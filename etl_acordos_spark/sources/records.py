@@ -28,7 +28,6 @@ def records_to_df(
     spark: SparkSession,
     records: Sequence[dict[str, Any]],
     expected_headers: Sequence[str] | None = None,
-    schema: T.StructType | None = None,
 ) -> DataFrame:
     """Turn API-style ``list[dict]`` records into a DataFrame.
 
@@ -36,14 +35,13 @@ def records_to_df(
     - If *expected_headers* is given and the records' keys don't cover
       them, rows are re-projected onto the pinned header list (missing →
       NULL) — the duplicate/dirty-header fallback of tasks/bronze.py:30-39.
-    - Without an explicit *schema* every column is ingested as string,
-      matching ``sheet.get_all_records()`` payloads; typing happens in the
-      bronze transform, not at ingest.
+    - Every column is ingested as string, matching
+      ``sheet.get_all_records()`` payloads; typing happens in the bronze
+      transform, not at ingest.
     """
     if not records:
         raise EmptySourceError("external source returned no records")
     headers = list(expected_headers) if expected_headers else list(records[0].keys())
     rows = [tuple(str(r[h]) if r.get(h) is not None else None for h in headers) for r in records]
-    if schema is None:
-        schema = T.StructType([T.StructField(h, T.StringType(), True) for h in headers])
+    schema = T.StructType([T.StructField(h, T.StringType(), True) for h in headers])
     return spark.createDataFrame(rows, schema=schema)
