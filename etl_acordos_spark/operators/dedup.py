@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from etl_acordos_spark.session import scoped_conf
@@ -1142,15 +1142,14 @@ def component_labels(
     itself). The shared core of `keep_representatives` (keep set) and
     `dup_cluster_stats` (cluster-size profile).
 
-    Each round is a
-    neighbor-min hop (one join + one aggregate on (id, label) longs)
-    followed by a path-halving jump (``label := label(label)``, a
-    self-join of the label table) — the jump is what turns O(diameter)
-    rounds into O(log diameter): a 1000-node chain converges in 10
-    rounds, property-tested in tests/test_properties.py. Iterates only
-    while labels still change (driver-side count check per round — an
-    iterative algorithm, the one place a driver loop is the right Spark
-    shape). All shuffles carry ids only, never document payloads.
+    Each round is a neighbor-min hop (one join + one aggregate on (id,
+    label) longs) followed by a path-halving jump (``label :=
+    label(label)``, a self-join of the label table) — the jump is what
+    turns O(diameter) rounds into O(log diameter): a 1000-node chain
+    converges in 10 rounds, property-tested in tests/test_properties.py.
+    Each round's checkpoint observes its changed labels (no extra job);
+    none stops the loop, and any after ``max_iter`` such rounds raise
+    ValueError. All shuffles carry ids only, never document payloads.
     """
     spark = docs.sparkSession
     edges = (
@@ -1163,8 +1162,8 @@ def component_labels(
     )
     # Iteration shuffles are many and small-keyed; cached plans block AQE
     # coalescing, so pin the shuffle width to cores for the loop (each
-    # round materializes eagerly via the convergence count, then the
-    # prior conf is restored).
+    # round materializes eagerly via its checkpoint, then the prior conf
+    # is restored).
     loop_conf = {
         "spark.sql.shuffle.partitions": str(
             spark.sparkContext.defaultParallelism
@@ -1178,7 +1177,7 @@ def component_labels(
             labels = docs.select(
                 F.col(id_col).alias("a"), F.col(id_col).alias("label")
             ).localCheckpoint(eager=True)
-            for _ in range(max_iter):
+            for _ in range(max_iter + 1):
                 neighbor_min = (
                     edges.join(labels.withColumnRenamed("a", "b"), "b")
                     .groupBy("a")
@@ -1189,6 +1188,7 @@ def component_labels(
                     F.least(
                         F.col("label"), F.coalesce("nlabel", F.col("label"))
                     ).alias("label"),
+                    F.col("label").alias("_old"),
                 )
                 # pointer jump (path halving): label := label(label). Labels
                 # are monotone (label(v) <= v), so the parent lookup always
@@ -1203,24 +1203,23 @@ def component_labels(
                 # ~10. Checkpointing materializes the round and resets the
                 # plan to a leaf (iterative algorithms are the one place
                 # lineage must be cut by hand).
-                new_labels = (
+                changed = Observation()
+                jumped = F.coalesce("jlabel", F.col("label"))
+                labels = (
                     hopped.join(parents, "label", "left")
-                    .select(
-                        "a",
-                        F.coalesce("jlabel", F.col("label")).alias("label"),
+                    .observe(
+                        changed, F.count_if(jumped != F.col("_old")).alias("n")
                     )
+                    .select("a", jumped.alias("label"))
                     .localCheckpoint(eager=True)
                 )
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "a")
-                    .filter(F.col("n.label") != F.col("o.label"))
-                    .limit(1)
-                    .count()
-                )
-                labels = new_labels
-                if changed == 0:
+                if changed.get["n"] == 0:
                     break
+            else:
+                raise ValueError(
+                    f"component_labels: labels still change after the "
+                    f"{max_iter}-round cap; raise `max_iter`"
+                )
     finally:
         # the loop has fully materialized `labels` (checkpoint leaf), so
         # the cached edges plan is dead weight — drop it rather than

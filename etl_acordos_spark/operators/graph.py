@@ -19,9 +19,14 @@ Last Reducer", WWW'11). Everything shuffles on vertex ids only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+#: vertex-count crossover for broadcasting a vertex-sized table: a ~20M-row
+#: broadcast hashmap is safe on an 8 GiB heap, 120M rows OOM it (the
+#: triangle calibration, see `pagerank`)
+BROADCAST_MAX_VERTICES = 20_000_000
 
 #: storage level for the O(edges) lineage pins: SERIALIZED bytes in
 #: memory with disk spill (Python's ``MEMORY_AND_DISK`` — unlike the
@@ -323,7 +328,7 @@ def pagerank(
     damping: float = 0.85,
     k: int = 20,
     broadcast_ranks: bool | None = None,
-    broadcast_max_vertices: int = 20_000_000,
+    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
 ) -> DataFrame:
     """Top-k vertices by PageRank over an undirected edge list
     (src < dst, distinct) after a fixed number of power iterations —
@@ -467,8 +472,8 @@ def hierarchy_flatten(
     loop stops as soon as every pointer has reached the root set —
     ``rounds`` is a safety CAP, not the iteration count. The default
     cap of 20 covers depth 2^20 ≈ 1M, so any real tree converges in
-    ceil(log2(depth)) joins and only a CYCLE (or a cap lowered by the
-    caller) exhausts it — in which case a ``ValueError`` is raised;
+    ceil(log2(depth)) + 1 joins and only a CYCLE (or a cap lowered by
+    the caller) exhausts it — in which case a ``ValueError`` is raised;
     wrong hierarchy data must never come back silently. A dangling
     parent reference (parent not in the node set) drops its node from
     the self-join and is caught by the row-count guard.
@@ -477,36 +482,35 @@ def hierarchy_flatten(
     depth) triples) with a lineage cut, so a 10^9-node catalog costs
     log(depth) shuffles, not depth — the standard distributed
     formulation, same family as the pointer-jumping
-    connected-components labeller in operators/dedup.py. The per-round
-    convergence probe is a left-anti count against the (dim-sized)
-    root set over the just-checkpointed state — one cheap job that
-    both enables early exit for shallow forests (most are) and makes
-    depth a runtime observation instead of a caller guess.
+    connected-components labeller in operators/dedup.py. Each round's
+    checkpoint observes (``df.observe``, no extra job) its row count and
+    its pointers whose target still has depth > 0 — only true roots
+    have depth 0, so every cycle, a self-loop included, stays pending.
+    A round counting 0 found its input resolved, so up to ``rounds +
+    1`` joins run, the last only confirming. Up to
+    ``BROADCAST_MAX_VERTICES`` nodes the lookup is broadcast, so a
+    round shuffles nothing.
 
     Returns (node, root, depth): depth 0 for roots.
     """
-    state = edges.select(
+
+    def checkpoint(df: DataFrame, pending: Column, *cols: Column):
+        obs = Observation()
+        df = df.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.count_if(pending).alias("u")
+        )
+        df = df.select(*cols).localCheckpoint(eager=True)
+        return df, obs.get["n"], obs.get["u"]
+
+    state, nodes, unresolved = checkpoint(
+        edges,
+        F.col("parent").isNotNull(),
         F.col("node"),
         F.coalesce(F.col("parent"), F.col("node")).alias("ptr"),
-        F.when(F.col("parent").isNull(), F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("int")
-        .alias("depth"),
-    ).localCheckpoint(eager=True)
-    # pinned once: every per-round convergence probe anti-joins against
-    # this dim-sized set, and an unpinned filter would re-execute the
-    # full edges lineage on each count (r10 ADVICE)
-    roots = (
-        edges.filter(F.col("parent").isNull())
-        .select(F.col("node").alias("_root"))
-        .localCheckpoint(eager=True)
+        F.col("parent").isNotNull().cast("int").alias("depth"),
     )
-
-    def unresolved_count(s: DataFrame) -> int:
-        return s.join(roots, s.ptr == roots._root, "left_anti").count()
-
-    unresolved = unresolved_count(state)
-    for _ in range(rounds):
+    kept = nodes
+    for _ in range(rounds + 1):
         if unresolved == 0:
             break
         lookup = state.select(
@@ -514,21 +518,20 @@ def hierarchy_flatten(
             F.col("ptr").alias("_p"),
             F.col("depth").alias("_d"),
         )
-        state = (
-            state.join(lookup, state.ptr == lookup._n)
-            .select(
-                "node",
-                F.col("_p").alias("ptr"),
-                (F.col("depth") + F.col("_d")).cast("int").alias("depth"),
-            )
-            .localCheckpoint(eager=True)
+        state, kept, unresolved = checkpoint(
+            state.join(
+                F.broadcast(lookup) if nodes <= BROADCAST_MAX_VERTICES
+                else lookup,
+                state.ptr == lookup._n,
+            ),
+            F.col("_d") > 0,
+            F.col("node"),
+            F.col("_p").alias("ptr"),
+            (F.col("depth") + F.col("_d")).cast("int").alias("depth"),
         )
-        unresolved = unresolved_count(state)
-    # two failure modes, two guards: a pointer that never reached a
-    # root after the cap (cycle, or a caller-lowered cap on a deeper
-    # tree); a node whose parent is missing from the node set was
-    # DROPPED by the self-join, so compare row counts as well
-    dropped = edges.count() - state.count()
+    # a cycle or a cap too low for the tree leaves pointers unresolved;
+    # a parent missing from the node set DROPPED its node from the join
+    dropped = nodes - kept
     if unresolved or dropped:
         raise ValueError(
             f"hierarchy_flatten: {unresolved} nodes unresolved and "

@@ -9,6 +9,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_acordos_spark.sources.parquet_io import read_parquet
+
 
 @dataclass(frozen=True)
 class QueryDef:
@@ -84,7 +86,7 @@ def ensure_package_shipped(spark: SparkSession) -> None:
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,7 +4,6 @@ from etl_acordos_spark.sources.parquet_io import (
     layer_key,
     parquet_exists,
     read_parquet,
-    read_table,
     write_parquet_layer,
 )
 from etl_acordos_spark.sources.records import records_to_df
@@ -18,7 +17,6 @@ __all__ = [
     "layer_key",
     "parquet_exists",
     "read_parquet",
-    "read_table",
     "write_parquet_layer",
     "records_to_df",
     "ddl_from_schema",

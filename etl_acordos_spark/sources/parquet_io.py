@@ -14,10 +14,14 @@ same paths are `s3a://` URIs (hadoop-aws), nothing here changes.
 
 from __future__ import annotations
 
+import copy
 import os
+import threading
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LAYER_PREFIXES = {"bronze": "brz", "silver": "slv", "gold": "gld"}
 
@@ -29,15 +33,93 @@ def layer_key(layer: str, name: str) -> str:
     return f"{layer}/{prefix}_{name}"
 
 
+# Session confs that change what Parquet schema inference returns: the
+# footer-to-Spark type mapping, which files the inference touches and
+# merges, and how partition directories become columns.
+SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+SCHEMA_MEMO_SIZE = 256
+_schemas: dict[tuple, StructType] = {}
+_schemas_lock = threading.Lock()
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for *path* through the session's Hadoop conf,
+    so local paths and ``s3a://`` URIs take the same route."""
+    sc = spark.sparkContext
+    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
+    fs = hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    return fs, hadoop_path
+
+
+def _file_signature(spark: SparkSession, path: str) -> tuple | None:
+    """Every file under *path* as (path, length, mtime), listed on the
+    driver (no Spark job); ``None`` when the path cannot be listed.
+    ``listStatus``, not ``listFiles``: the located statuses of the
+    latter make the local file system fork a process per file to read
+    its permissions."""
+    fs, hadoop_path = _hadoop_fs(spark, path)
+    sig, dirs = [], [hadoop_path]
+    try:
+        while dirs:
+            for st in fs.listStatus(dirs.pop()):
+                if st.isDirectory():
+                    dirs.append(st.getPath())
+                else:
+                    sig.append(
+                        (st.getPath().toString(), st.getLen(),
+                         st.getModificationTime())
+                    )
+    except Py4JJavaError:
+        return None
+    return tuple(sorted(sig))
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Read a Parquet table (reference tasks/silver.py:32-34). Lazy —
-    filters/projections applied later are pushed into this scan."""
-    return spark.read.parquet(path)
+    filters/projections applied later are pushed into this scan.
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one of the testdata tables from a scale-factor directory."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    Schema inference is a Spark job of its own (a footer read, 60-90 ms
+    per table on a 4-core host), so the inferred ``StructType`` is
+    memoized and handed back through ``spark.read.schema(...)``, which
+    launches no job. The memo key is the file signature of *path* —
+    every file's path, length and modification time, listed on the
+    driver through the Hadoop FileSystem — plus the value of each conf
+    in ``SCHEMA_CONFS``. Inference reads nothing but those files'
+    footers, the partition directory names and those confs, so a hit
+    returns exactly the schema a fresh inference would: a rewrite
+    (Spark names new part files on every write), an append, a deleted
+    file or a flipped conf changes the key and infers afresh, and what
+    a read returns never depends on what was read before. The one
+    change the signature cannot see is a file rewritten in place at the
+    same length within the file system's mtime granularity. A path that
+    cannot be listed (missing, or a glob) is read without the memo. At
+    most ``SCHEMA_MEMO_SIZE`` schemas are kept; the oldest goes first.
+    """
+    sig = _file_signature(spark, path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (sig, tuple(spark.conf.get(k) for k in SCHEMA_CONFS))
+    schema = _schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schemas_lock:
+        if len(_schemas) >= SCHEMA_MEMO_SIZE:
+            del _schemas[next(iter(_schemas))]
+        # a copy: ``df.schema`` is the caller's object, and
+        # ``StructType.add`` mutates in place
+        _schemas[key] = copy.deepcopy(df.schema)
+    return df
 
 
 def parquet_exists(spark: SparkSession, path: str) -> bool:
@@ -46,9 +128,7 @@ def parquet_exists(spark: SparkSession, path: str) -> bool:
     Uses the Hadoop FileSystem API so it works identically for local
     paths and object stores — no data read, metadata only.
     """
-    sc = spark.sparkContext
-    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    fs, hadoop_path = _hadoop_fs(spark, path)
     return bool(fs.exists(hadoop_path))
 
 

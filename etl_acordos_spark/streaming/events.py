@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from etl_acordos_spark.session import one_shot_stream_conf, scoped_conf
+from etl_acordos_spark.sources.parquet_io import read_parquet
 
 #: file-stream schema when events.parquet carries TIMESTAMP(NANOS): with
 #: spark.sql.legacy.parquet.nanosAsLong the raw int64 nanos surface as
@@ -68,7 +69,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     are naive-UTC and the session runs UTC, so the instant is
     preserved)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     ts_is_nanos = batch_schema["ts"].dataType == LongType()
     # glob, not the bare file path: the file-stream source requires a
     # directory basePath, which it derives from the glob's parent

@@ -140,3 +140,18 @@ def explain_str(df, mode: str = "simple") -> str:
     with contextlib.redirect_stdout(buf):
         df.explain(mode=mode)
     return buf.getvalue()
+
+
+def count_jobs(spark, fn) -> int:
+    """Run *fn* under a fresh job group and return how many Spark jobs
+    it launched, as the status tracker records them."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -2018,6 +2018,78 @@ def test_hierarchy_flatten_raises_on_unresolvable_input(spark):
         hierarchy_flatten(dangling)
 
 
+def test_hierarchy_flatten_self_loop_raises_unresolved(spark):
+    """A self-loop points at itself from the start, so "the pointer
+    stopped moving" would call node 1 a root; only a true root has
+    depth 0, so the loop runs to the cap and raises."""
+    from etl_acordos_spark.operators.graph import hierarchy_flatten
+
+    loop = spark.createDataFrame([(0, None), (1, 1)], "node int, parent int")
+    with pytest.raises(ValueError, match="1 nodes unresolved"):
+        hierarchy_flatten(loop, rounds=4)
+
+
+def test_hierarchy_flatten_decimal_tree_job_budget(spark):
+    """The 2,000-node decimal tree (parent = node div 10, depth 4)
+    resolves exactly within 14 Spark jobs: convergence and the row
+    guard ride on the rounds' checkpoints, with no probe jobs."""
+    from etl_acordos_spark.operators.graph import hierarchy_flatten
+
+    from tests.oracle_utils import count_jobs
+
+    edges = spark.range(2000).select(
+        F.col("id").alias("node"),
+        F.when(F.col("id") > 0, F.expr("id div 10")).alias("parent"),
+    )
+    rows = []
+    jobs = count_jobs(
+        spark, lambda: rows.extend(hierarchy_flatten(edges).collect())
+    )
+    assert jobs <= 14, jobs
+    assert {r["node"]: (r["root"], r["depth"]) for r in rows} == {
+        n: (0, len(str(n)) if n else 0) for n in range(2000)
+    }
+
+
+def test_hierarchy_flatten_shuffled_rounds_match(spark, monkeypatch):
+    """Past the broadcast crossover both join sides shuffle: same
+    roots and depths, and the dropped-node guard still fires."""
+    from etl_acordos_spark.operators import graph
+
+    monkeypatch.setattr(graph, "BROADCAST_MAX_VERTICES", 0)
+    edges = spark.range(300).select(
+        F.col("id").alias("node"),
+        F.when(F.col("id") > 0, F.expr("id div 3")).alias("parent"),
+    )
+    got = {
+        r["node"]: (r["root"], r["depth"])
+        for r in graph.hierarchy_flatten(edges).collect()
+    }
+    depth = {0: 0}
+    for n in range(1, 300):
+        depth[n] = depth[n // 3] + 1
+    assert got == {n: (0, depth[n]) for n in range(300)}
+    dangling = spark.createDataFrame([(1, None), (2, 99)], ["node", "parent"])
+    with pytest.raises(ValueError, match="1 dropped"):
+        graph.hierarchy_flatten(dangling)
+
+
+def test_component_labels_raises_past_cap(spark):
+    """A chain that still changes labels at `max_iter` raises instead of
+    returning mislabelled nodes; a higher cap labels it correctly."""
+    from etl_acordos_spark.operators.dedup import component_labels
+
+    n = 200
+    docs = spark.range(n).select(F.col("id").alias("doc_id"))
+    pairs = spark.range(n - 1).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    with pytest.raises(ValueError, match="still change"):
+        component_labels(docs, pairs, "doc_id", max_iter=3)
+    labels = component_labels(docs, pairs, "doc_id", max_iter=10).collect()
+    assert len(labels) == n and all(r["label"] == 0 for r in labels)
+
+
 def test_rfm_extremes_score_correctly(spark):
     """The most recent/frequent/high-spend customer scores 555; the
     stalest/rarest/lowest scores 111 (5 customers, 5 buckets, one per
