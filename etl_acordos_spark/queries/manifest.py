@@ -35,6 +35,13 @@ verified it on. ``rotate_unchecked_first`` re-fronts any key whose
 current fingerprint differs. Refresh at the start of each round with::
 
     python -m etl_acordos_spark.queries.manifest refresh
+
+A committed ``CORRECTNESS_sim.json`` at the repo root is read by the
+same refresh: the verify harness's ``driver_sim.py --out`` writes it
+from a run of the driver contract (same session, oracles and hash) on
+a clean worktree and records the commit it ran on. Its green keys are
+fingerprinted at that commit, so an entry then means "verified at the
+commit it was fingerprinted on", by the driver or by that local run.
 """
 
 from __future__ import annotations
@@ -61,6 +68,7 @@ QUERY_MODULES = (
 )
 
 MANIFEST_PATH = os.path.join(os.path.dirname(__file__), "verification_manifest.json")
+SIM_ARTIFACT = "CORRECTNESS_sim.json"
 
 
 def repo_root() -> str:
@@ -374,13 +382,17 @@ def current_fingerprints() -> dict[str, dict[str, str]]:
 # -- manifest I/O -----------------------------------------------------
 
 
-def load_manifest() -> dict[str, dict[str, str]] | None:
+def _load_json(path: str) -> dict | None:
     try:
-        with open(MANIFEST_PATH, encoding="utf-8") as f:
+        with open(path, encoding="utf-8") as f:
             data = json.load(f)
-        return data if isinstance(data, dict) else None
     except (OSError, ValueError):
         return None
+    return data if isinstance(data, dict) else None
+
+
+def load_manifest() -> dict[str, dict[str, str]] | None:
+    return _load_json(MANIFEST_PATH)
 
 
 def save_manifest(manifest: dict[str, dict[str, str]]) -> None:
@@ -418,13 +430,10 @@ def classify_changed(keys: list[str]) -> tuple[set[str], set[str]]:
 
 
 def _green_keys_in(path: str) -> set[str]:
-    try:
-        with open(path, encoding="utf-8") as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        return set()
-    if not isinstance(data, dict):
-        return set()
+    return _green_rows(_load_json(path) or {})
+
+
+def _green_rows(data: dict) -> set[str]:
     green = set()
     for key, row in data.items():
         if not isinstance(row, dict):
@@ -457,11 +466,20 @@ def _verified_commit_for(path: str, root: str) -> str | None:
     return parent or None
 
 
+def _git_ok(root: str, *args: str) -> bool:
+    return subprocess.run(
+        ["git", "-C", root, *args], capture_output=True
+    ).returncode == 0
+
+
 def refresh(all_rounds: bool = False) -> dict[str, dict[str, str]]:
     """Update manifest entries for keys green in committed
     CORRECTNESS_r*.json files, each fingerprinted at the commit the
-    driver actually verified. With *all_rounds* (bootstrap) every round
-    is replayed oldest-first; otherwise only the latest round."""
+    driver actually verified, and for keys green in ``SIM_ARTIFACT``,
+    fingerprinted at the commit it records; applied in history order,
+    so a key's newest verification wins. With *all_rounds* (bootstrap)
+    every round is replayed oldest-first; otherwise only the latest
+    round."""
     import glob
 
     root = repo_root()
@@ -469,6 +487,7 @@ def refresh(all_rounds: bool = False) -> dict[str, dict[str, str]]:
     paths = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
     if not all_rounds:
         paths = paths[-1:]
+    sources: list[tuple[str, set[str]]] = []
     for path in paths:
         commit = _verified_commit_for(path, root)
         if commit is None:
@@ -483,8 +502,36 @@ def refresh(all_rounds: bool = False) -> dict[str, dict[str, str]]:
                 stacklevel=2,
             )
             continue
+        sources.append((commit, _green_keys_in(path)))
+    sim = _load_json(os.path.join(root, SIM_ARTIFACT))
+    if sim is not None:
+        commit = sim.get("commit")
+        if isinstance(commit, str) and _git_ok(
+            root, "cat-file", "-e", f"{commit}^{{commit}}"
+        ):
+            # in history order, so a later driver round supersedes it
+            at = next(
+                (
+                    i
+                    for i, (c, _) in enumerate(sources)
+                    if c != commit
+                    and _git_ok(root, "merge-base", "--is-ancestor", commit, c)
+                ),
+                len(sources),
+            )
+            sources.insert(at, (commit, _green_rows(sim.get("rows") or {})))
+        else:
+            import warnings
+
+            warnings.warn(
+                f"refresh: {SIM_ARTIFACT} names commit {commit!r}, which "
+                "this repository does not have — its green keys were NOT "
+                "fingerprinted",
+                stacklevel=2,
+            )
+    for commit, green in sources:
         fps = compute_fingerprints(git_provider(commit, root))
-        for key in _green_keys_in(path):
+        for key in green:
             if key in fps:
                 manifest[key] = fps[key]
     save_manifest(manifest)

@@ -104,6 +104,14 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     same length within the file system's mtime granularity. A path that
     cannot be listed (missing, or a glob) is read without the memo. At
     most ``SCHEMA_MEMO_SIZE`` schemas are kept; the oldest goes first.
+
+    The signature costs one ``listStatus`` per directory, made one after
+    another on the driver on every read, hits included, and Spark lists
+    the same files again. That cost was measured only on a local file
+    system, where it is far below the inference job it saves. On an
+    object store (``s3a://``) each directory is a LIST round trip, so a
+    partitioned table may pay more in listing than the memo saves; no
+    such run has been measured.
     """
     sig = _file_signature(spark, path)
     if sig is None:

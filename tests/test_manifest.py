@@ -332,3 +332,71 @@ def test_round_boundary_lag_covers_untracked_artifact(tmp_path, monkeypatch):
         check=True,
     )
     assert _round_boundary_lag({"k1"}) is False
+
+
+def test_refresh_reads_sim_artifact_in_history_order(tmp_path, monkeypatch):
+    """``CORRECTNESS_sim.json`` (``driver_sim.py --out``) refreshes its
+    green keys at the commit it records, a later driver round
+    supersedes it, and a commit the repository lacks warns instead of
+    recording anything."""
+    import shutil
+    import subprocess
+    import warnings
+
+    repo = tmp_path / "repo"
+    shutil.copytree(
+        os.path.join(REPO, "etl_acordos_spark"),
+        repo / "etl_acordos_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    git = ["git", "-C", str(repo), "-c", "user.email=t@example.com",
+           "-c", "user.name=t"]
+    subprocess.run(["git", "init", "-q", str(repo)], check=True)
+
+    def commit(msg: str) -> str:
+        subprocess.run([*git, "add", "-A"], check=True)
+        subprocess.run([*git, "commit", "-qm", msg], check=True)
+        return subprocess.run(
+            [*git, "rev-parse", "HEAD"], check=True, capture_output=True,
+            text=True,
+        ).stdout.strip()
+
+    c1 = commit("code")
+    rel = repo / "etl_acordos_spark" / "operators" / "relational.py"
+    lines = rel.read_text(encoding="utf-8").splitlines(keepends=True)
+    i = next(n for n, ln in enumerate(lines) if ln.startswith("def rfm_segments("))
+    while not lines[i].rstrip().endswith(":"):
+        i += 1
+    lines.insert(i + 1, "    _touched = 1\n")
+    rel.write_text("".join(lines), encoding="utf-8")
+    c2 = commit("edit rfm_segments")
+    green = {"hash_match": True, "spark_rows": 1, "err": None}
+    (repo / "CORRECTNESS_r01.json").write_text(json.dumps({"ext_rfm": green}))
+    commit("driver round on c2")
+
+    mpath = repo / "manifest.json"
+    mpath.write_text("{}")
+    monkeypatch.setattr(manifest, "repo_root", lambda: str(repo))
+    monkeypatch.setattr(manifest, "MANIFEST_PATH", str(mpath))
+    sim = repo / manifest.SIM_ARTIFACT
+    rows = {
+        "ext_rfm": green,
+        "ext_dedup_exact": green,
+        "ext_benford": {"hash_match": False, "spark_rows": 3, "err": None},
+    }
+    sim.write_text(json.dumps({"commit": c1, "rows": rows}))
+    m = manifest.refresh()
+    fps1 = manifest.compute_fingerprints(manifest.git_provider(c1, str(repo)))
+    fps2 = manifest.compute_fingerprints(manifest.git_provider(c2, str(repo)))
+    assert fps1["ext_rfm"] != fps2["ext_rfm"]
+    assert m["ext_rfm"] == fps2["ext_rfm"]  # the later driver round wins
+    assert m["ext_dedup_exact"] == fps1["ext_dedup_exact"]
+    assert "ext_benford" not in m
+
+    mpath.write_text("{}")
+    sim.write_text(json.dumps({"commit": "0" * 40, "rows": rows}))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        m = manifest.refresh()
+    assert any("does not have" in str(w.message) for w in caught)
+    assert m == {"ext_rfm": fps2["ext_rfm"]}
