@@ -487,12 +487,10 @@ def hierarchy_flatten(
     its pointers whose target still has depth > 0 — only true roots
     have depth 0, so every cycle, a self-loop included, stays pending.
     A round counting 0 found its input resolved, so up to ``rounds +
-    1`` joins run, the last only confirming. Up to 3/4 of
-    ``BROADCAST_MAX_VERTICES`` nodes the lookup is broadcast, so a
-    round shuffles nothing. That limit is derived, not run: the 20M
-    calibration holds a two-column row (24 B as an UnsafeRow), a lookup
-    row (_n, _p, _d) is 32 B, so 15M lookup rows hold the same bytes.
-    No run near that size has been made.
+    1`` joins run, the last only confirming. Up to 15M nodes (3/4 of
+    ``BROADCAST_MAX_VERTICES``, set for a 24 B row; a lookup row is 32
+    B — derived, never run near it) the lookup is broadcast, so a round
+    shuffles nothing.
 
     Returns (node, root, depth): depth 0 for roots.
     """
