@@ -13,9 +13,9 @@ arriving microbatch of embeddings:
   2. assigns every vector to its nearest centroid with one
      Arrow-batched numpy matmul (the pandas-UDF fast path),
   3. writes the batch into the store PARTITIONED BY (ingest_batch,
-     cell) with dynamic partition overwrite — a replayed batch
-     (foreachBatch is at-least-once) overwrites exactly its own
-     ``ingest_batch=N`` partitions, never double-appending.
+     cell) with dynamic partition overwrite — the per-batch overwrite
+     of the `streaming.microbatch` delivery contract: a replayed batch
+     overwrites exactly its own ``ingest_batch=N`` partitions.
 
 A query then reads the store with a ``cell IN (probe cells)`` filter:
 Catalyst turns the partition column filter into directory pruning, so
@@ -54,8 +54,11 @@ from etl_acordos_spark.operators.simsearch import (
     quantize_mat,
     train_coarse_centroids,
 )
-from etl_acordos_spark.session import one_shot_stream_conf, scoped_conf
 from etl_acordos_spark.streaming.batching import write_id_range_batches
+from etl_acordos_spark.streaming.microbatch import (
+    run_microbatches,
+    run_namespace,
+)
 
 # The quantizer trains on the first TRAIN_FACTOR * n_lists vectors by id
 # (`train_coarse_centroids`' id-prefix sample); the eager size guard in
@@ -176,15 +179,11 @@ def streaming_ann_index_run(
     cell-partitioned IVF store under a PID-scoped namespace; returns
     the run namespace path (probe with `ann_index_topk`).
 
-    ``resume=True`` restarts an interrupted run against its existing
-    source, store, and checkpoint: the engine redelivers every batch
-    whose foreachBatch ran without the commit landing; the dynamic
-    partition overwrite rewrites exactly the replayed batch's
-    (ingest_batch, cell) partitions and the staged-rename quantizer
-    freeze is skipped once `centroids_dir` exists — the crash-recovery
-    path the fault-injection tests drive. ``on_batch_complete(
-    batch_id)`` runs after the batch's cell write, before the engine
-    commit (telemetry / injected-crash point).
+    Delivery, ``resume`` and ``on_batch_complete``: see the
+    `streaming.microbatch` contract. The per-batch overwrite here is a
+    dynamic partition overwrite of the batch's own (ingest_batch, cell)
+    partitions, and a replay skips the staged-rename quantizer freeze
+    once `centroids_dir` exists.
 
     Raises ``ValueError`` eagerly when *vectors* cannot train the
     quantizer at all (fewer rows than the TRAIN_FACTOR × n_lists
@@ -201,88 +200,62 @@ def streaming_ann_index_run(
             f"sample {train_n} ({TRAIN_FACTOR} × n_lists={n_lists}); "
             "lower n_lists or supply more vectors"
         )
-    run_ns = os.path.join(base_dir, f"stream_ann_index_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
+    run_ns = run_namespace(base_dir, "stream_ann_index")
     cells_dir = os.path.join(run_ns, "cells")
     centroids_dir = os.path.join(run_ns, "centroids")
-    ckpt = os.path.join(run_ns, "ckpt")
-    if resume:
-        if not os.path.isdir(src):
-            raise ValueError(
-                "streaming_ann_index_run: resume=True but no prior "
-                f"run at {run_ns}"
-            )
-    else:
-        shutil.rmtree(run_ns, ignore_errors=True)
-        os.makedirs(run_ns, exist_ok=True)
 
-    # dynamic mode scopes mode("overwrite") to the partitions a write
-    # actually touches — the idempotent-replay contract
-    with scoped_conf(
-        spark,
-        {
-            **one_shot_stream_conf(spark),
-            "spark.sql.sources.partitionOverwriteMode": "dynamic",
-        },
-    ):
-        if not resume:
-            write_id_range_batches(
-                vectors, id_col, [id_col, vec_col], run_ns, src, n_batches
-            )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    # the quantizer is immutable once frozen, so later batches reuse
+    # the driver-side copy instead of re-reading + collecting it
+    quantizer: dict[str, np.ndarray] = {}
 
-        # the quantizer is immutable once frozen, so later batches reuse
-        # the driver-side copy instead of re-reading + collecting it
-        quantizer: dict[str, np.ndarray] = {}
-
-        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if not os.path.exists(centroids_dir):
-                if not _train_quantizer(
-                    spark, batch_df, id_col, vec_col, n_lists,
-                    centroids_dir, quantize=quantize,
-                ):
-                    return  # empty batch cannot train — wait for data
-            if "C" not in quantizer:
-                C_loaded, q_stored = _load_centroids(spark, centroids_dir)
-                if q_stored != int(quantize or 0):
-                    raise ValueError(
-                        "streaming_ann_index_run: store at "
-                        f"{centroids_dir} was trained with q_scale="
-                        f"{q_stored}, run asked for {quantize!r}"
-                    )
-                quantizer["C"] = C_loaded
-            C = quantizer["C"]
-            assign = (
-                assign_cell_quantized_udf(C, quantize)
-                if quantize
-                else assign_cell_udf(C)
-            )
-            (
-                batch_df.select(
-                    F.col(id_col),
-                    as_double(vec_col).alias(vec_col),
-                    assign(as_double(vec_col)).alias("cell"),
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not os.path.exists(centroids_dir):
+            if not _train_quantizer(
+                spark, batch_df, id_col, vec_col, n_lists,
+                centroids_dir, quantize=quantize,
+            ):
+                return  # empty batch cannot train — wait for data
+        if "C" not in quantizer:
+            C_loaded, q_stored = _load_centroids(spark, centroids_dir)
+            if q_stored != int(quantize or 0):
+                raise ValueError(
+                    "streaming_ann_index_run: store at "
+                    f"{centroids_dir} was trained with q_scale="
+                    f"{q_stored}, run asked for {quantize!r}"
                 )
-                .withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("ingest_batch", "cell")
-                .parquet(cells_dir)
-            )
-            if on_batch_complete is not None:
-                on_batch_complete(batch_id)
-
-        (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+            quantizer["C"] = C_loaded
+        C = quantizer["C"]
+        assign = (
+            assign_cell_quantized_udf(C, quantize)
+            if quantize
+            else assign_cell_udf(C)
         )
+        (
+            batch_df.select(
+                F.col(id_col),
+                as_double(vec_col).alias(vec_col),
+                assign(as_double(vec_col)).alias("cell"),
+            )
+            .withColumn("ingest_batch", F.lit(batch_id))
+            .write.mode("overwrite")
+            .partitionBy("ingest_batch", "cell")
+            .parquet(cells_dir)
+        )
+
+    run_microbatches(
+        spark,
+        "streaming_ann_index_run",
+        run_ns,
+        lambda src: write_id_range_batches(
+            vectors, id_col, [id_col, vec_col], run_ns, src, n_batches
+        ),
+        process_batch,
+        resume=resume,
+        on_batch_complete=on_batch_complete,
+        # dynamic mode scopes mode("overwrite") to the partitions a
+        # write actually touches — the idempotent-replay contract
+        conf={"spark.sql.sources.partitionOverwriteMode": "dynamic"},
+    )
     return run_ns
 
 

@@ -16,11 +16,10 @@ Each arriving microbatch:
   3. writes its survivors, their band entries, and their per-bucket
      count deltas, each into a batch-id-named subdirectory.
 
-Fault tolerance: foreachBatch is at-least-once, so every store write
-is an idempotent per-batch OVERWRITE — a replayed batch rewrites its
-own subdirectories instead of double-appending, and a crash between
-the three writes leaves nothing a retry can't overwrite. The probe
-side of the same contract: a batch only ever READS subdirectories
+Fault tolerance: every store write is the per-batch overwrite of the
+`streaming.microbatch` delivery contract, so a crash between the three
+writes leaves nothing a retry can't overwrite. The probe side of the
+same contract: a batch only ever READS subdirectories
 with batch index strictly below its own (`_load_store`), so a replay
 never collides with its prior attempt's output (which would Jaccard-
 match every kept doc against itself and drop the whole batch). The
@@ -45,6 +44,7 @@ extension surface.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 
@@ -56,8 +56,13 @@ from etl_acordos_spark.operators.dedup import (
     dedup_batch_against,
     minhash_bands,
 )
-from etl_acordos_spark.session import one_shot_stream_conf, scoped_conf
 from etl_acordos_spark.streaming.batching import write_id_range_batches
+from etl_acordos_spark.streaming.microbatch import (
+    read_batches,
+    run_microbatches,
+    run_namespace,
+    store_batch,
+)
 
 
 def _band_schema(
@@ -75,12 +80,6 @@ def _band_schema(
             T.StructField("band_val", band_t),
         ]
     )
-
-
-def _store_batch(df: DataFrame, root: str, batch_id: int) -> None:
-    # idempotent per-batch write: a replayed batch overwrites its own
-    # subdirectory, never double-appends the store
-    df.write.mode("overwrite").parquet(os.path.join(root, f"b{batch_id:05d}"))
 
 
 def _load_store(
@@ -145,7 +144,6 @@ def _dedup_index_process_batch(
     *,
     text_col: str,
     id_col: str,
-    doc_schema: T.StructType,
     kept_dir: str,
     index_dir: str,
     counts_dir: str,
@@ -191,10 +189,10 @@ def _dedup_index_process_batch(
         else None
     )
     if corpus is None:
-        corpus = spark.createDataFrame([], doc_schema)
+        corpus = spark.createDataFrame([], batch_df.schema)
     if c_bands is None:
         c_bands = spark.createDataFrame(
-            [], _band_schema(doc_schema, id_col, hash_fn)
+            [], _band_schema(batch_df.schema, id_col, hash_fn)
         )
     survivors = dedup_batch_against(
         batch_df,
@@ -211,7 +209,7 @@ def _dedup_index_process_batch(
         hash_fn=hash_fn,
     ).localCheckpoint(eager=False)
 
-    _store_batch(
+    store_batch(
         batch_df.join(survivors, [id_col], "left_semi"), kept_dir, batch_id
     )
     # no checkpoint: both uses read the b_bands leaf + the tiny survivor
@@ -221,8 +219,8 @@ def _dedup_index_process_batch(
         ["doc"],
         "left_semi",
     )
-    _store_batch(kept_bands, index_dir, batch_id)
-    _store_batch(
+    store_batch(kept_bands, index_dir, batch_id)
+    store_batch(
         kept_bands.groupBy("band_idx", "band_val").agg(
             F.count(F.lit(1)).alias("n")
         ),
@@ -250,9 +248,8 @@ def streaming_dedup_index_run(
 ) -> DataFrame:
     """Run *docs* through the streaming dedup-index pipeline as
     *n_batches* ascending-id microbatches; returns the settled kept-doc
-    ids (lazy read over the kept store, which outlives this call —
-    PID-scoped working dirs, same rationale as
-    `events.incremental_upsert_run`). Ids must be non-null.
+    ids (lazy read over the kept store, which outlives this call in its
+    `microbatch.run_namespace`). Ids must be non-null.
 
     *probe_last_batches* — optional freshness horizon: probe only the
     newest N batches' index entries instead of the whole history (the
@@ -268,84 +265,51 @@ def streaming_dedup_index_run(
     Default None = dedup against all history (the fold-equivalence
     contract).
 
-    ``resume=True`` restarts an interrupted run against its existing
-    source, stores, and checkpoint: the engine redelivers every batch
-    whose foreachBatch ran without the commit landing, `_load_store`'s
-    ``< batch_id`` cut keeps the replay from probing its own prior
-    attempt, and the per-batch overwrite rewrites partial store state
-    — the crash-recovery path the fault-injection tests drive.
-    ``on_batch_complete(batch_id)`` runs after all three store writes,
-    before the engine commit (telemetry / injected-crash point)."""
+    Delivery, ``resume`` and ``on_batch_complete``: see the
+    `streaming.microbatch` contract; the hook fires after all three
+    store writes. On a replay, `_load_store`'s ``< batch_id`` cut keeps
+    the batch from probing its own prior attempt."""
     if probe_last_batches is not None and probe_last_batches < 1:
         # parts[-0:] would silently mean "all history", the opposite of
         # the caller's intent
         raise ValueError(
             "streaming_dedup_index_run: probe_last_batches must be >= 1"
         )
-    run_ns = os.path.join(base_dir, f"stream_dedup_index_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
-    index_dir = os.path.join(run_ns, "band_index")
-    kept_dir = os.path.join(run_ns, "kept")
-    counts_dir = os.path.join(run_ns, "bucket_counts")
-    ckpt = os.path.join(run_ns, "ckpt")
-    if resume:
-        if not os.path.isdir(src):
-            raise ValueError(
-                "streaming_dedup_index_run: resume=True but no prior "
-                f"run at {run_ns}"
-            )
-    else:
-        shutil.rmtree(run_ns, ignore_errors=True)
-        os.makedirs(run_ns, exist_ok=True)
-
-    with scoped_conf(spark, one_shot_stream_conf(spark)):
-        # deterministic delivery order: contiguous ascending id ranges,
-        # one file per range, one file per trigger — "keep-first" means
-        # lower-id batches win, and within a batch the lower id wins
-        # (dedup_batch_against's keep-first contract); a sampled
-        # repartitionByRange split would change which non-transitive
-        # near-dup comparisons happen between reruns (see batching.py)
-        if not resume:
-            write_id_range_batches(
-                docs, id_col, [id_col, text_col], run_ns, src, n_batches
-            )
-        doc_schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(doc_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-            _dedup_index_process_batch(
-                spark,
-                batch_df,
-                batch_id,
-                text_col=text_col,
-                id_col=id_col,
-                doc_schema=doc_schema,
-                kept_dir=kept_dir,
-                index_dir=index_dir,
-                counts_dir=counts_dir,
-                num_perm=num_perm,
-                bands=bands,
-                threshold=threshold,
-                shingle_n=shingle_n,
-                max_bucket_size=max_bucket_size,
-                probe_last_batches=probe_last_batches,
-                hash_fn=hash_fn,
-            )
-            if on_batch_complete is not None:
-                on_batch_complete(batch_id)
-
-        (
-            stream.writeStream.foreachBatch(process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.read.parquet(os.path.join(kept_dir, "b*")).select(id_col)
+    run_ns = run_namespace(base_dir, "stream_dedup_index")
+    process_batch = functools.partial(
+        _dedup_index_process_batch,
+        spark,
+        text_col=text_col,
+        id_col=id_col,
+        kept_dir=os.path.join(run_ns, "kept"),
+        index_dir=os.path.join(run_ns, "band_index"),
+        counts_dir=os.path.join(run_ns, "bucket_counts"),
+        num_perm=num_perm,
+        bands=bands,
+        threshold=threshold,
+        shingle_n=shingle_n,
+        max_bucket_size=max_bucket_size,
+        probe_last_batches=probe_last_batches,
+        hash_fn=hash_fn,
+    )
+    # deterministic delivery order: contiguous ascending id ranges, one
+    # file per range, one file per trigger — "keep-first" means lower-id
+    # batches win, and within a batch the lower id wins
+    # (dedup_batch_against's keep-first contract); a sampled
+    # repartitionByRange split would change which non-transitive
+    # near-dup comparisons happen between reruns (see batching.py)
+    run_microbatches(
+        spark,
+        "streaming_dedup_index_run",
+        run_ns,
+        lambda src: write_id_range_batches(
+            docs, id_col, [id_col, text_col], run_ns, src, n_batches
+        ),
+        process_batch,
+        resume=resume,
+        on_batch_complete=on_batch_complete,
+    )
+    return read_batches(spark, os.path.join(run_ns, "kept")).select(id_col)
 
 
 def _finish_pending_compaction(counts_dir: str) -> None:

@@ -40,6 +40,12 @@ from pyspark.sql.types import (
 
 from etl_acordos_spark.session import one_shot_stream_conf, scoped_conf
 from etl_acordos_spark.sources.parquet_io import read_parquet
+from etl_acordos_spark.streaming.microbatch import (
+    read_batches,
+    run_microbatches,
+    run_namespace,
+    store_batch,
+)
 
 #: file-stream schema when events.parquet carries TIMESTAMP(NANOS): with
 #: spark.sql.legacy.parquet.nanosAsLong the raw int64 nanos surface as
@@ -302,75 +308,51 @@ def incremental_upsert_run(
     directory. At 100 TB the swap becomes a table-format MERGE
     (Delta/Iceberg) scoped to the partitions a batch touches; the
     per-batch plan — reduce, co-partitioned merge join, partition-local
-    rewrite — is exactly this one.
+    rewrite — is exactly this one. Delivery follows the
+    `streaming.microbatch` contract (no resume here).
     """
     import os
     import shutil
 
     from pyspark.sql import Window
 
-    # PID-scoped working dirs: a structured-streaming checkpoint is
-    # fatally corrupted if another process rmtree's it mid-run (observed
-    # as "ckpt/commits does not exist" when two harnesses run this query
-    # concurrently against the same scratch root), so each process gets
-    # its own trio (fresh-started per run; the snapshot must outlive this
-    # call because the returned DataFrame reads it lazily).
-    run_ns = os.path.join(base_dir, f"stream_upsert_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
+    run_ns = run_namespace(base_dir, "stream_upsert")
     lake = os.path.join(run_ns, "lake")
-    ckpt = os.path.join(run_ns, "ckpt")
-    shutil.rmtree(run_ns, ignore_errors=True)
+    latest_order = [F.col("ts").desc(), F.col("event_id").desc()]
 
-    # Same one-shot sizing as run_stream_to_table: each batch's two
-    # latest-per-key windows and the snapshot rewrite inherit the
-    # session's shuffle partitions — at full width that's dozens of tiny
-    # tasks and part-files per microbatch for a snapshot of a few
-    # thousand keys. A production deployment sizes this to the key
-    # cardinality. The scope covers the seed write and stream
-    # construction too, and an exception anywhere in setup must not
-    # leak the narrowed setting into the session.
-    with scoped_conf(spark, one_shot_stream_conf(spark)):
-        cols = ["event_id", "user_id", "ts", "value"]
-        events.select(*cols).repartition(n_batches).write.parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    def latest_per_user(df: DataFrame) -> DataFrame:
+        w = Window.partitionBy("user_id").orderBy(*latest_order)
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
         )
 
-        latest_order = [F.col("ts").desc(), F.col("event_id").desc()]
-
-        def latest_per_user(df: DataFrame) -> DataFrame:
-            w = Window.partitionBy("user_id").orderBy(*latest_order)
-            return (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
+    def merge_batch(batch: DataFrame, batch_id: int) -> None:
+        upserts = latest_per_user(batch)
+        if os.path.exists(lake):
+            merged = latest_per_user(
+                spark.read.parquet(lake).unionByName(upserts)
             )
+        else:
+            merged = upserts
+        tmp = f"{lake}_v{batch_id}"
+        merged.write.mode("overwrite").parquet(tmp)
+        old = f"{lake}_old{batch_id}"
+        if os.path.exists(lake):
+            os.rename(lake, old)
+        os.rename(tmp, lake)
+        shutil.rmtree(old, ignore_errors=True)
 
-        def merge_batch(batch: DataFrame, batch_id: int) -> None:
-            upserts = latest_per_user(batch)
-            if os.path.exists(lake):
-                merged = latest_per_user(
-                    spark.read.parquet(lake).unionByName(upserts)
-                )
-            else:
-                merged = upserts
-            tmp = f"{lake}_v{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp)
-            old = f"{lake}_old{batch_id}"
-            if os.path.exists(lake):
-                os.rename(lake, old)
-            os.rename(tmp, lake)
-            shutil.rmtree(old, ignore_errors=True)
-
-        (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    run_microbatches(
+        spark,
+        "incremental_upsert_run",
+        run_ns,
+        lambda src: events.select("event_id", "user_id", "ts", "value")
+        .repartition(n_batches)
+        .write.parquet(src),
+        merge_batch,
+    )
     return spark.read.parquet(lake)
 
 
@@ -386,12 +368,10 @@ def streaming_cms_run(
 ) -> DataFrame:
     """Streaming count-min sketch maintenance (foreachBatch): the value
     stream (one column ``v``), delivered as *n_batches* microbatches,
-    folds each batch's cell-count DELTA into a parquet cells store by
-    summing per (salt, bucket) with an idempotent per-batch overwrite
-    (``mode("overwrite")`` is delete-then-write, NOT an atomic rename —
-    a crash mid-write leaves a partial delta dir that the replayed
-    batch rewrites on restart) — the always-on frequency sketch a
-    streaming pipeline keeps next to its ingest.
+    lands each batch's cell-count DELTA in its own per-batch
+    subdirectory of a parquet cells store, and the settled sketch sums
+    per (salt, bucket) over all of them — the always-on frequency
+    sketch a streaming pipeline keeps next to its ingest.
 
     CMS cells are ADDITIVE, so the settled store is bit-identical to a
     batch build over the full stream no matter how values were split
@@ -400,70 +380,35 @@ def streaming_cms_run(
     checkable). State is O(n_batches · depth · 16^width_hex) rows,
     still input-size-independent — the whole point of sketching.
 
-    Replay safety: foreachBatch is at-least-once, so summing a delta
-    into a rolling total would DOUBLE-COUNT a replayed batch. Instead
-    each batch's delta lands in its own ``b{batch_id}`` subdirectory
-    with an idempotent OVERWRITE (the dedup_index store convention —
-    a replayed batch rewrites its own prior attempt), and the settled
-    sketch is the per-(salt, bucket) sum over all delta dirs. A
-    long-running stream compacts old delta dirs into one the same way
-    ext_compaction folds small files — additivity makes that merge
-    lossless at any time.
+    Summing each delta into one rolling total instead would DOUBLE-COUNT
+    a replayed batch under at-least-once delivery; the per-batch
+    overwrite absorbs the replay. A long-running stream compacts old
+    delta dirs into one the same way ext_compaction folds small files —
+    additivity makes that merge lossless at any time.
 
-    ``resume=True`` RESTARTS an interrupted run against its existing
-    source, store, and checkpoint instead of starting fresh: the
-    engine's checkpoint log redelivers every batch whose foreachBatch
-    ran without the commit landing, and the idempotent per-batch
-    overwrite absorbs the replay — the crash-recovery path the
-    fault-injection tests exercise. ``on_batch_complete(batch_id)`` is
-    an optional per-batch completion hook invoked AFTER the batch's
-    delta write and BEFORE the engine commits the batch (telemetry in
-    production; the injected-crash point in tests)."""
+    Delivery, ``resume`` and ``on_batch_complete``: see the
+    `streaming.microbatch` contract."""
     import os
-    import shutil
 
     from etl_acordos_spark.operators.relational import cms_cells
 
-    run_ns = os.path.join(base_dir, f"stream_cms_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
+    run_ns = run_namespace(base_dir, "stream_cms")
     store = os.path.join(run_ns, "cells")
-    ckpt = os.path.join(run_ns, "ckpt")
-    if resume:
-        if not os.path.isdir(src):
-            raise ValueError(
-                f"streaming_cms_run: resume=True but no prior run at {run_ns}"
-            )
-    else:
-        shutil.rmtree(run_ns, ignore_errors=True)
-        os.makedirs(store)
-
-    with scoped_conf(spark, one_shot_stream_conf(spark)):
-        if not resume:
-            vals.select("v").repartition(n_batches).write.parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def write_delta(batch: DataFrame, batch_id: int) -> None:
-            cms_cells(
-                batch.filter(F.col("v").isNotNull()), depth, width_hex
-            ).write.mode("overwrite").parquet(
-                os.path.join(store, f"b{batch_id:05d}")
-            )
-            if on_batch_complete is not None:
-                on_batch_complete(batch_id)
-
-        (
-            stream.writeStream.foreachBatch(write_delta)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    run_microbatches(
+        spark,
+        "streaming_cms_run",
+        run_ns,
+        lambda src: vals.select("v").repartition(n_batches).write.parquet(src),
+        lambda batch, batch_id: store_batch(
+            cms_cells(batch.filter(F.col("v").isNotNull()), depth, width_hex),
+            store,
+            batch_id,
+        ),
+        resume=resume,
+        on_batch_complete=on_batch_complete,
+    )
     return (
-        spark.read.parquet(os.path.join(store, "b*"))
+        read_batches(spark, store)
         .groupBy("salt", "bucket")
         .agg(F.sum("cell_n").cast("bigint").alias("cell_n"))
     )
@@ -482,10 +427,9 @@ def streaming_hll_run(
     """Streaming HyperLogLog register maintenance (foreachBatch): the
     keyed value stream, delivered as *n_batches* microbatches, lands
     each batch's (group, bucket, max-rank) registers in its own
-    ``b{batch_id}`` delta subdirectory with an idempotent per-batch
-    overwrite; the settled store is the max-per-(group, bucket) merge
-    over all delta dirs — the always-on distinct-count sketch a
-    streaming pipeline keeps next to its ingest.
+    per-batch delta subdirectory; the settled store is the
+    max-per-(group, bucket) merge over all delta dirs — the always-on
+    distinct-count sketch a streaming pipeline keeps next to its ingest.
 
     HLL registers are MAX-mergeable, so the settled store is
     bit-identical to a batch `hll_md5_registers` build over the full
@@ -498,56 +442,35 @@ def streaming_hll_run(
     input-size-independent. A long-running stream compacts old delta
     dirs into one by the same max-merge — lossless at any time.
 
-    ``resume`` / ``on_batch_complete``: same crash-recovery restart
-    and batch-completion-hook contract as `streaming_cms_run`."""
+    Delivery, ``resume`` and ``on_batch_complete``: see the
+    `streaming.microbatch` contract."""
     import os
-    import shutil
 
     from etl_acordos_spark.operators.relational import hll_md5_registers
 
-    run_ns = os.path.join(base_dir, f"stream_hll_{os.getpid()}")
-    src = os.path.join(run_ns, "src")
+    run_ns = run_namespace(base_dir, "stream_hll")
     store = os.path.join(run_ns, "regs")
-    ckpt = os.path.join(run_ns, "ckpt")
-    if resume:
-        if not os.path.isdir(src):
-            raise ValueError(
-                f"streaming_hll_run: resume=True but no prior run at {run_ns}"
-            )
-    else:
-        shutil.rmtree(run_ns, ignore_errors=True)
-        os.makedirs(store)
-
-    with scoped_conf(spark, one_shot_stream_conf(spark)):
-        cols = [*group_cols, value_col]
-        if not resume:
-            df.select(*cols).repartition(n_batches).write.parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def write_delta(batch: DataFrame, batch_id: int) -> None:
+    run_microbatches(
+        spark,
+        "streaming_hll_run",
+        run_ns,
+        lambda src: df.select(*group_cols, value_col)
+        .repartition(n_batches)
+        .write.parquet(src),
+        lambda batch, batch_id: store_batch(
             hll_md5_registers(
                 batch.filter(F.col(value_col).isNotNull()),
                 group_cols,
                 value_col,
-            ).write.mode("overwrite").parquet(
-                os.path.join(store, f"b{batch_id:05d}")
-            )
-            if on_batch_complete is not None:
-                on_batch_complete(batch_id)
-
-        (
-            stream.writeStream.foreachBatch(write_delta)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+            ),
+            store,
+            batch_id,
+        ),
+        resume=resume,
+        on_batch_complete=on_batch_complete,
+    )
     return (
-        spark.read.parquet(os.path.join(store, "b*"))
+        read_batches(spark, store)
         .groupBy(*group_cols, "bucket")
         .agg(F.max("mr").alias("mr"))
     )

@@ -95,14 +95,50 @@ def test_pq_topk_zero_norm_corpus_vector_is_not_nan(spark):
 def test_incremental_upsert_restores_shuffle_partitions_on_setup_failure(
     spark, tmp_path
 ):
-    from etl_acordos_spark.streaming.events import incremental_upsert_run
+    """Every foreachBatch pipeline, fed a frame lacking the columns its
+    seed write selects, fails in setup and leaves the session conf as it
+    found it (ann_index also scopes partitionOverwriteMode)."""
+    from etl_acordos_spark.streaming.ann_index import streaming_ann_index_run
+    from etl_acordos_spark.streaming.dedup_index import (
+        streaming_dedup_index_run,
+    )
+    from etl_acordos_spark.streaming.events import (
+        incremental_upsert_run,
+        streaming_cms_run,
+        streaming_hll_run,
+    )
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    # events frame lacking the expected columns → setup (select) throws
-    bad = spark.range(3).toDF("event_id")
-    with pytest.raises(Exception):
-        incremental_upsert_run(spark, bad, str(tmp_path), n_batches=2)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    keys = [
+        "spark.sql.shuffle.partitions",
+        "spark.sql.sources.partitionOverwriteMode",
+    ]
+    before = {k: spark.conf.get(k, None) for k in keys}
+    # 4 rows pass ann_index's eager training-size guard at n_lists=1, so
+    # its failure too comes from the seed write inside the scope
+    bad = spark.range(4).toDF("event_id")
+    base = str(tmp_path)
+    pipelines = {
+        "incremental_upsert_run": lambda: incremental_upsert_run(
+            spark, bad, base, n_batches=2
+        ),
+        "streaming_cms_run": lambda: streaming_cms_run(
+            spark, bad, base, n_batches=2
+        ),
+        "streaming_hll_run": lambda: streaming_hll_run(
+            spark, bad, ["ano"], "o_custkey", base, n_batches=2
+        ),
+        "streaming_dedup_index_run": lambda: streaming_dedup_index_run(
+            spark, bad, "text", "doc_id", base, n_batches=2
+        ),
+        "streaming_ann_index_run": lambda: streaming_ann_index_run(
+            spark, bad, "vec_id", "embedding", base, n_batches=2, n_lists=1
+        ),
+    }
+    for name, run in pipelines.items():
+        with pytest.raises(Exception):
+            run()
+        after = {k: spark.conf.get(k, None) for k in keys}
+        assert after == before, name
 
 
 # ------------------------------------------------------------------ (d)

@@ -73,3 +73,17 @@ def test_sessions_and_conf_saves_have_one_home():
         and rel != "etl_acordos_spark/session.py"
     )
     assert saves == [], saves
+
+
+def test_foreach_batch_has_one_home():
+    """Every foreachBatch pipeline goes through `run_microbatches`: no
+    package module but the runner's starts a foreachBatch stream or
+    sets a checkpoint location of its own."""
+    runner = "etl_acordos_spark/streaming/microbatch.py"
+    copies = sorted(
+        rel
+        for rel, text in _py_files(REPO_ROOT / "etl_acordos_spark")
+        if re.search(r"foreachBatch\(|checkpointLocation", text)
+        and rel != runner
+    )
+    assert copies == [], copies

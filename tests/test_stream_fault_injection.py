@@ -23,11 +23,10 @@ from pyspark.sql.utils import StreamingQueryException
 
 from etl_acordos_spark.queries.base import t
 
-# r13: this file is the streaming fault-injection tier — excluded from the default run
-# (pytest.ini addopts); run with -m "" or -m slow.
-pytestmark = pytest.mark.slow
-
-
+# The streaming fault-injection tier: every case but the HLL crash
+# recovery (~6 s, the default run's one streaming resume) is slow tier,
+# excluded from the default run (pytest.ini addopts); run them with
+# -m "" or -m slow.
 
 CRASH_BATCH = 1
 
@@ -70,6 +69,7 @@ def _crash_then_resume(run_fn, **kwargs):
     return settled, rec.batches
 
 
+@pytest.mark.slow
 def test_stream_cms_crash_recovery(spark, sf_smoke):
     from etl_acordos_spark.operators.relational import cms_cells
     from etl_acordos_spark.streaming.events import streaming_cms_run
@@ -109,6 +109,7 @@ def test_stream_hll_crash_recovery(spark, sf_smoke):
     assert got == want and got
 
 
+@pytest.mark.slow
 def test_stream_dedup_index_crash_recovery(spark):
     """Settled kept-set after crash+resume equals the uninterrupted
     run's (crash window: all three stores written, commit missing —
@@ -145,6 +146,7 @@ def test_stream_dedup_index_crash_recovery(spark):
     assert sorted(r[0] for r in settled.collect()) == want
 
 
+@pytest.mark.slow
 def test_stream_ann_index_crash_recovery(spark, sf_smoke):
     """Probe over the crash+resumed store equals batch `ivf_topk`
     (crash window: batch 1's (ingest_batch, cell) partitions written,
@@ -194,6 +196,7 @@ def _resume_exhausted(run_fn, **kwargs):
     return first, resumed, rec.batches
 
 
+@pytest.mark.slow
 def test_stream_cms_resume_over_exhausted_source(spark, sf_smoke):
     from etl_acordos_spark.streaming.events import streaming_cms_run
 
@@ -210,6 +213,7 @@ def test_stream_cms_resume_over_exhausted_source(spark, sf_smoke):
     assert a and a == sorted(map(tuple, resumed.collect()))
 
 
+@pytest.mark.slow
 def test_stream_hll_resume_over_exhausted_source(spark, sf_smoke):
     from etl_acordos_spark.streaming.events import streaming_hll_run
 
@@ -226,6 +230,7 @@ def test_stream_hll_resume_over_exhausted_source(spark, sf_smoke):
     assert a and a == {tuple(r) for r in resumed.collect()}
 
 
+@pytest.mark.slow
 def test_stream_dedup_index_resume_over_exhausted_source(spark):
     from etl_acordos_spark.streaming.dedup_index import (
         streaming_dedup_index_run,
@@ -247,6 +252,7 @@ def test_stream_dedup_index_resume_over_exhausted_source(spark):
     assert kept == sorted(r[0] for r in resumed.collect())
 
 
+@pytest.mark.slow
 def test_stream_ann_index_resume_over_exhausted_source(spark, sf_smoke):
     from etl_acordos_spark.operators.simsearch import query_vector
     from etl_acordos_spark.streaming.ann_index import (

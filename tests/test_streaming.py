@@ -502,14 +502,12 @@ def test_stream_dedup_index_replay_is_idempotent(spark):
     batch1 = spark.read.parquet(
         os.path.join(run_ns, "src", "batch_0001.parquet")
     )
-    doc_schema = batch1.schema
     _dedup_index_process_batch(
         spark,
         batch1,
         1,
         text_col="text",
         id_col="doc_id",
-        doc_schema=doc_schema,
         kept_dir=os.path.join(run_ns, "kept"),
         index_dir=os.path.join(run_ns, "band_index"),
         counts_dir=os.path.join(run_ns, "bucket_counts"),
@@ -699,6 +697,46 @@ def test_stream_hll_registers_equal_batch_build(spark, sf_oracle, tmp_path):
         ).collect()
     }
     assert replayed == batch
+
+
+@pytest.mark.parametrize("pipeline", ["cms", "hll", "dedup_index", "ann_index"])
+def test_resume_without_prior_run_raises(spark, tmp_path, pipeline):
+    """``resume=True`` over a namespace no run has seeded is refused up
+    front, naming the pipeline, before any store or checkpoint exists."""
+    import os
+
+    from etl_acordos_spark.streaming.ann_index import streaming_ann_index_run
+    from etl_acordos_spark.streaming.dedup_index import (
+        streaming_dedup_index_run,
+    )
+    from etl_acordos_spark.streaming.events import (
+        streaming_cms_run,
+        streaming_hll_run,
+    )
+
+    base = str(tmp_path)
+    # 4 rows pass ann_index's eager training-size guard at n_lists=1
+    df = spark.range(4).toDF("id")
+    runs = {
+        "cms": ("streaming_cms_run", lambda: streaming_cms_run(
+            spark, df, base, resume=True
+        )),
+        "hll": ("streaming_hll_run", lambda: streaming_hll_run(
+            spark, df, [], "id", base, resume=True
+        )),
+        "dedup_index": ("streaming_dedup_index_run", lambda: (
+            streaming_dedup_index_run(spark, df, "id", "id", base, resume=True)
+        )),
+        "ann_index": ("streaming_ann_index_run", lambda: (
+            streaming_ann_index_run(
+                spark, df, "id", "id", base, n_lists=1, resume=True
+            )
+        )),
+    }
+    name, run = runs[pipeline]
+    with pytest.raises(ValueError, match=f"{name}: resume=True but no prior run"):
+        run()
+    assert os.listdir(base) == []
 
 
 def test_id_range_batch_boundaries_match_rank_rule(spark, sf_smoke):
