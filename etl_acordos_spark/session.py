@@ -21,6 +21,9 @@ Defaults are chosen for correctness-at-scale first:
     `extra_conf` (rule of thumb: 2-3x total executor cores, with AQE
     coalescing the tail).
   - an 8 GiB driver heap (``$SPARK_GRAFT_DRIVER_MEM`` overrides).
+  - one shuffle file write per map task
+    (``spark.shuffle.sort.bypassMergeThreshold=0``, which turns off the
+    bypass-merge writer; the comment at the setting says why).
 
 Operators that need a different runtime conf for one phase (the one-shot
 streaming runs' narrow shuffle width, `one_shot_stream_conf`; a
@@ -59,6 +62,15 @@ def get_spark(
         # Files >128MB split into tasks; at 100 TB this keeps scan tasks
         # memory-bounded regardless of file layout.
         "spark.sql.files.maxPartitionBytes": "134217728",
+        # No bypass-merge shuffle writer. Spark takes it for any shuffle
+        # with at most this many reduce partitions and no map-side
+        # combine (every SQL shuffle under local[n]); it writes one file
+        # per reduce partition and then copies them all into the map
+        # output, so every shuffle byte reaches disk twice. At 0 every
+        # SQL shuffle takes the serialized writer, which sorts record
+        # pointers in memory and writes (or renames) one file per map
+        # task.
+        "spark.shuffle.sort.bypassMergeThreshold": "0",
         # Managed (e.g. bucketed) tables land in scratch, not the repo.
         "spark.sql.warehouse.dir": os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"

@@ -5,8 +5,9 @@ reproducible batch split: their semantics depend on WHICH batch a row
 lands in (keep-first dedup compares against earlier batches; index
 structures are trained on the first batch), so the split must be stable
 across reruns. ``repartitionByRange`` is not — RangePartitioner samples
-its boundaries with a random seed — hence explicit percentile cuts and
-pinned file mtimes so the file stream replays batches in order.
+its boundaries with a random seed — hence explicit percentile cuts,
+written as one file per batch named in batch order (the runner pins
+mtimes in file-name order, so the file stream replays them in order).
 
 In production these pipelines consume real arrival batches (Kafka
 offsets, object-store listings); this module only exists to fabricate
@@ -32,8 +33,8 @@ def write_id_range_batches(
 ) -> None:
     """Write *df* (projected to *cols*) as ``n_batches`` single-file
     parquet batches of contiguous ascending *id_col* ranges under
-    *src*, with strictly increasing mtimes so a
-    ``maxFilesPerTrigger=1`` file stream delivers them in id order.
+    *src*, named ``batch_{i:04d}.parquet`` so `run_microbatches`'
+    file-name delivery order is id order.
     Ids must be non-null. percentile_approx boundaries are
     deterministic for the same input; empty input degrades to one
     empty batch."""
@@ -51,7 +52,6 @@ def write_id_range_batches(
     # percentile over zero rows is NULL → deliver one empty batch
     edges = [None, *(cuts or []), None]
     os.makedirs(src, exist_ok=True)
-    base_mtime = os.stat(run_ns).st_mtime
     for i in range(len(edges) - 1):
         part = df.select(*cols)
         if edges[i] is not None:
@@ -66,4 +66,3 @@ def write_id_range_batches(
         dst = os.path.join(src, f"batch_{i:04d}.parquet")
         os.replace(os.path.join(build, pf), dst)
         shutil.rmtree(build, ignore_errors=True)
-        os.utime(dst, (base_mtime + i, base_mtime + i))

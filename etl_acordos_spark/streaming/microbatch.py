@@ -15,7 +15,12 @@ Delivery contract, the same for every pipeline above:
     A fresh run deletes and recreates the directory.
   - Delivery: one source file per trigger (``maxFilesPerTrigger=1``)
     under ``trigger(availableNow=True)``, so a run delivers exactly the
-    seeded files, in file-mtime order, and stops. foreachBatch is
+    seeded files and stops. The file source delivers in mtime order,
+    and one seed write gives its part-files near-equal mtimes, so after
+    the seed the runner stamps the ``*.parquet`` files with strictly
+    increasing mtimes in file-name order: batch *i* is the *i*-th file
+    by name (``part-0000i`` of a ``repartition(n)`` write), on every
+    run. foreachBatch is
     AT-LEAST-ONCE: a batch whose function returned but whose commit did
     not land is delivered again, under the same batch id, on restart.
   - Per-batch overwrite: so every store write a batch makes is an
@@ -96,6 +101,7 @@ def run_microbatches(
     with scoped_conf(spark, {**one_shot_stream_conf(spark), **(conf or {})}):
         if not resume:
             seed(src)
+            _pin_delivery_order(src)
         (
             spark.readStream.schema(spark.read.parquet(src).schema)
             .option("maxFilesPerTrigger", 1)
@@ -106,6 +112,15 @@ def run_microbatches(
             .start()
             .awaitTermination()
         )
+
+
+def _pin_delivery_order(src: str) -> None:
+    """Give the seeded files strictly increasing mtimes in file-name
+    order, one second apart, so the file stream delivers them by name."""
+    files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    base = os.stat(src).st_mtime
+    for i, name in enumerate(files):
+        os.utime(os.path.join(src, name), (base + i, base + i))
 
 
 def store_batch(df: DataFrame, root: str, batch_id: int) -> None:

@@ -87,3 +87,44 @@ def test_foreach_batch_has_one_home():
         and rel != runner
     )
     assert copies == [], copies
+
+
+def _jvm_wchar(spark) -> int:
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/io") as io:
+        return next(int(ln.split()[1]) for ln in io if ln.startswith("wchar:"))
+
+
+def _shuffle_data_files(spark) -> dict[str, int]:
+    blocks = spark._jvm.org.apache.spark.SparkEnv.get().blockManager()
+    files = {}
+    for d in blocks.diskBlockManager().localDirs():
+        for dirpath, _, names in os.walk(d.getAbsolutePath()):
+            for name in names:
+                if name.startswith("shuffle_") and name.endswith(".data"):
+                    path = os.path.join(dirpath, name)
+                    files[path] = os.path.getsize(path)
+    return files
+
+
+@pytest.mark.skipif(
+    not os.path.exists("/proc/self/io"), reason="needs Linux /proc/<pid>/io"
+)
+def test_get_spark_writes_each_shuffle_byte_once(spark):
+    """A `get_spark` session writes a shuffle's map output to disk once:
+    the JVM's write() bytes over a ~10 MB ``repartition(4)`` job stay
+    near the size of the shuffle data files it leaves. Spark's bypass
+    writer (a file per reduce partition, then a copy into the map
+    output) reads 2.0x here."""
+    df = spark.range(0, 150_000, numPartitions=4).selectExpr(
+        "id", "sha2(cast(id AS string), 256) AS h"
+    )
+    before = _shuffle_data_files(spark)
+    wchar = _jvm_wchar(spark)
+    df.repartition(4).write.format("noop").mode("overwrite").save()
+    wrote = _jvm_wchar(spark) - wchar
+    shuffle_bytes = sum(
+        n for p, n in _shuffle_data_files(spark).items() if p not in before
+    )
+    assert shuffle_bytes > 8_000_000, shuffle_bytes
+    assert wrote < 1.3 * shuffle_bytes, (wrote, shuffle_bytes)

@@ -895,3 +895,35 @@ def test_stream_dedup_index_compacts_mid_stream(spark):
         }
 
     assert totals(run_ns) == totals(twin_ns)
+
+
+def test_upsert_delivers_batch_i_from_the_ith_part_file(spark, tmp_path):
+    """The upsert's seed is one ``repartition(n)`` write whose part-files
+    get near-equal mtimes; the runner pins the delivery order to file
+    names, so on every run batch *i* is ``part-0000i`` (read back from
+    the file source's log, ``ckpt/sources/0/<i>``)."""
+    import json
+    import os
+
+    from etl_acordos_spark.streaming.events import incremental_upsert_run
+
+    events = spark.range(400).selectExpr(
+        "id AS event_id",
+        "id % 37 AS user_id",
+        "timestamp_seconds(1700000000 + id) AS ts",
+        "cast(id AS double) AS value",
+    )
+    n = 4
+    for _ in range(2):
+        incremental_upsert_run(spark, events, str(tmp_path), n_batches=n)
+        run_ns = os.path.join(str(tmp_path), f"stream_upsert_{os.getpid()}")
+        parts = sorted(
+            f for f in os.listdir(os.path.join(run_ns, "src"))
+            if f.endswith(".parquet")
+        )
+        assert len(parts) == n
+        for i in range(n):
+            log = os.path.join(run_ns, "ckpt", "sources", "0", str(i))
+            with open(log) as f:
+                entries = [json.loads(ln) for ln in f.read().splitlines()[1:]]
+            assert [os.path.basename(e["path"]) for e in entries] == [parts[i]]
