@@ -6,8 +6,7 @@ lands in (keep-first dedup compares against earlier batches; index
 structures are trained on the first batch), so the split must be stable
 across reruns. ``repartitionByRange`` is not — RangePartitioner samples
 its boundaries with a random seed — hence explicit percentile cuts,
-written as one file per batch named in batch order (the runner pins
-mtimes in file-name order, so the file stream replays them in order).
+one file per batch, named in batch order.
 
 In production these pipelines consume real arrival batches (Kafka
 offsets, object-store listings); this module only exists to fabricate

@@ -4,6 +4,7 @@ they found it."""
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 from pathlib import Path
@@ -89,22 +90,29 @@ def test_foreach_batch_has_one_home():
     assert copies == [], copies
 
 
-def _jvm_wchar(spark) -> int:
-    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+def _jvm_wchar() -> int:
+    from pyspark import SparkContext
+
+    # the gateway process is the JVM (spark-class execs java)
+    pid = SparkContext._gateway.proc.pid
     with open(f"/proc/{pid}/io") as io:
         return next(int(ln.split()[1]) for ln in io if ln.startswith("wchar:"))
 
 
 def _shuffle_data_files(spark) -> dict[str, int]:
-    blocks = spark._jvm.org.apache.spark.SparkEnv.get().blockManager()
-    files = {}
-    for d in blocks.diskBlockManager().localDirs():
-        for dirpath, _, names in os.walk(d.getAbsolutePath()):
-            for name in names:
-                if name.startswith("shuffle_") and name.endswith(".data"):
-                    path = os.path.join(dirpath, name)
-                    files[path] = os.path.getsize(path)
-    return files
+    """The ``shuffle_*.data`` files in the block-manager directories
+    under the session's local dirs, resolved in Spark's order:
+    ``$SPARK_LOCAL_DIRS``, then ``spark.local.dir``, then /tmp."""
+    local = (
+        os.environ.get("SPARK_LOCAL_DIRS")
+        or spark.conf.get("spark.local.dir", None)
+        or "/tmp"
+    )
+    return {
+        path: os.path.getsize(path)
+        for d in local.split(",")
+        for path in glob.glob(os.path.join(d, "blockmgr-*", "*", "shuffle_*.data"))
+    }
 
 
 @pytest.mark.skipif(
@@ -120,9 +128,9 @@ def test_get_spark_writes_each_shuffle_byte_once(spark):
         "id", "sha2(cast(id AS string), 256) AS h"
     )
     before = _shuffle_data_files(spark)
-    wchar = _jvm_wchar(spark)
+    wchar = _jvm_wchar()
     df.repartition(4).write.format("noop").mode("overwrite").save()
-    wrote = _jvm_wchar(spark) - wchar
+    wrote = _jvm_wchar() - wchar
     shuffle_bytes = sum(
         n for p, n in _shuffle_data_files(spark).items() if p not in before
     )
