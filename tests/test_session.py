@@ -21,6 +21,8 @@ UNSET_KEY = "spark.graft.test.scopedConf"
 #: scripts that deliberately simulate a bare external driver, which
 #: builds its own session without the engine's factory
 BARE_DRIVERS = {"tests/test_foreign_cwd.py", ".claude/skills/verify/driver_sim.py"}
+#: a bare session that starts the JVM before `get_spark` does, on purpose
+BARE_DRIVERS.add("tests/test_local_fs.py")
 
 
 def _assert_restored(spark, before: str) -> None:
