@@ -23,10 +23,13 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-#: vertex-count crossover for broadcasting a vertex-sized table: a ~20M-row
-#: broadcast hashmap is safe on an 8 GiB heap, 120M rows OOM it (the
-#: triangle calibration, see `pagerank`)
-BROADCAST_MAX_VERTICES = 20_000_000
+#: row-count crossover for broadcasting a vertex- or edge-sized table, read
+#: by `triangle_counts` (oriented edges), `pagerank` (vertices) and
+#: `hierarchy_flatten` (nodes): a ~20M-row broadcast hashmap is safe on an
+#: 8 GiB heap, 120M rows OOM it (the r8 triangle calibration). Tests force
+#: the shuffled branches with ``monkeypatch.setattr(graph,
+#: "BROADCAST_MAX_ROWS", 0)``.
+BROADCAST_MAX_ROWS = 20_000_000
 
 #: storage level for the O(edges) lineage pins: SERIALIZED bytes in
 #: memory with disk spill (Python's ``MEMORY_AND_DISK`` — unlike the
@@ -146,12 +149,7 @@ def co_occurrence_edges(
     )
 
 
-def triangle_counts(
-    edges: DataFrame,
-    k: int = 20,
-    broadcast_edges: bool | None = None,
-    broadcast_max_edges: int = 20_000_000,
-) -> DataFrame:
+def triangle_counts(edges: DataFrame, k: int = 20) -> DataFrame:
     """Top-k vertices by triangle participation over an undirected
     edge list (src < dst, distinct).
 
@@ -162,27 +160,28 @@ def triangle_counts(
     exactly (the oracle's formulation). Ties at the top-k boundary
     break by vertex id — the returned row SET is deterministic.
 
-    ``broadcast_edges=True`` (r12 shape) closes wedges by ADJACENCY
+    The broadcast branch (r12 shape) closes wedges by ADJACENCY
     INTERSECTION: one broadcast of the per-vertex oriented neighbor
     lists and one `array_intersect` per edge — O(d_u + d_w) ≤ O(√m)
     work per edge with no wedge-stream materialization at all; only
     (vertex, partial count) pairs hit the exchange. This halves the
     sf0.1 wedge phase vs the previous broadcast wedge-join (which
     generated the O(Σ outdeg²) stream — 34× the edge count here —
-    through two hash probes). Requires the per-vertex neighbor-list
+    through two hash probes). It requires the per-vertex neighbor-list
     map (O(m) total cells, same order as the oriented edge list) to
-    fit in executor memory; ``False`` falls back to shuffled wedge
-    joins, where intersection would be strictly worse (see the
-    in-code note).
+    fit in executor memory; past that the shuffled branch closes
+    wedges with hash joins, where intersection would be strictly
+    worse (see the in-code note).
 
-    ``None`` (the default) AUTO-selects at the measured crossover:
-    broadcast while the oriented list holds ≤ *broadcast_max_edges*
-    rows, shuffled beyond. The r8 100× scale smoke is the calibration:
-    12M edges (10× tile) broadcast fine on an 8 GiB heap (α = 0.97),
-    119.6M edges (100× tile) OOM'd it — ~100 B/edge of hashmap × two
-    probes is ~12 GiB per executor, too much at ANY executor size worth
-    provisioning. The count is one cheap job over the already-
-    checkpointed oriented leaf.
+    The branch is picked by `BROADCAST_MAX_ROWS`: broadcast while the
+    oriented list holds at most that many rows, shuffled beyond. The
+    r8 100× scale smoke is the calibration: 12M edges (10× tile)
+    broadcast fine on an 8 GiB heap (α = 0.97), 119.6M edges (100×
+    tile) OOM'd it — ~100 B/edge of hashmap × two probes is ~12 GiB
+    per executor, too much at ANY executor size worth provisioning.
+    The count is one cheap job over the already-checkpointed oriented
+    leaf. Tests force the shuffled branch by patching the constant
+    to 0.
 
     Returns (vertex, n_triangles) — k rows.
     """
@@ -219,9 +218,7 @@ def triangle_counts(
         F.when(src_first, F.col("src")).otherwise(F.col("dst")).alias("u"),
         F.when(src_first, F.col("dst")).otherwise(F.col("src")).alias("w"),
     ).localCheckpoint(eager=True, storageLevel=_EDGE_PIN)
-    if broadcast_edges is None:
-        broadcast_edges = oriented.count() <= broadcast_max_edges
-    if broadcast_edges:
+    if oriented.count() <= BROADCAST_MAX_ROWS:
         # adjacency-intersection wedge closure (r12): build the oriented
         # out-neighbor list per vertex (one narrow shuffle), recover each
         # edge (u, w) WITH u's list attached by re-exploding the list —
@@ -327,8 +324,6 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     k: int = 20,
-    broadcast_ranks: bool | None = None,
-    broadcast_max_vertices: int = BROADCAST_MAX_VERTICES,
 ) -> DataFrame:
     """Top-k vertices by PageRank over an undirected edge list
     (src < dst, distinct) after a fixed number of power iterations —
@@ -347,17 +342,16 @@ def pagerank(
     cut, iteration i's plan inlines all i-1 predecessors and analysis
     goes quadratic.
 
-    ``broadcast_ranks=None`` (the default) AUTO-selects the join
-    strategy at a vertex-count crossover, mirroring
-    `triangle_counts`' edge crossover: broadcast the vertex-sized
-    tables (degrees, then per-vertex contributions) while the graph
-    holds ≤ *broadcast_max_vertices* vertices, shuffled joins beyond.
+    The join strategy is picked by `BROADCAST_MAX_ROWS`, the same
+    crossover `triangle_counts` applies to edges: broadcast the
+    vertex-sized tables (degrees, then per-vertex contributions) while
+    the graph holds at most that many vertices, shuffled joins beyond.
     The probe is free — ``n`` is already computed for the teleport
-    term. The threshold reuses the triangle calibration (a ~20M-row
-    broadcast hashmap is safe on an 8 GiB heap; 120M rows OOM it), and
-    a rank/contribution row (id, double) is no wider than an oriented
-    edge — the two per-iteration hashmaps together match the wedge
-    join's old footprint, so 20M stays conservative.
+    term. A rank/contribution row (id, double) is no wider than an
+    oriented edge — the two per-iteration hashmaps together match the
+    wedge join's old footprint, so the triangle calibration stays
+    conservative here. Tests force the shuffled joins by patching the
+    constant to 0.
 
     Returns (vertex, rank) — k rows, rank floored at 1e-9, top-k ties
     broken by vertex id.
@@ -395,13 +389,12 @@ def pagerank(
         return e0.select(
             F.col("src").alias("vertex"), F.lit(0.0).alias("rank")
         ).limit(0)
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= broadcast_max_vertices
+    broadcast = n <= BROADCAST_MAX_ROWS
     ranks = deg.select("v", F.lit(1.0 / n).alias("rank"))
     base = (1.0 - damping) / n
     for _ in range(iterations):
         ranks = _pagerank_iteration(
-            sym, ranks, deg, base, damping, broadcast_ranks
+            sym, ranks, deg, base, damping, broadcast
         ).localCheckpoint(eager=True)
     return (
         ranks.select(F.col("v").alias("vertex"), "rank")
@@ -416,7 +409,7 @@ def _pagerank_iteration(
     deg: DataFrame,
     base: float,
     damping: float,
-    broadcast_ranks: bool,
+    broadcast: bool,
 ) -> DataFrame:
     """One power iteration, returned PRE-checkpoint (the loop cuts
     lineage; plan-health tests inspect this frame — the per-iteration
@@ -430,13 +423,13 @@ def _pagerank_iteration(
     makes the iteration two map-side joins + one (vertex, partial-sum)
     exchange; the checkpointed leaves carry no partitioning metadata,
     so shuffled joins would re-exchange everything every round. Past
-    the vertex crossover the caller flips *broadcast_ranks* off and
+    the vertex crossover the caller passes ``broadcast=False`` and
     both joins degrade to shuffled equi-joins."""
-    d = F.broadcast(deg) if broadcast_ranks else deg
+    d = F.broadcast(deg) if broadcast else deg
     c = ranks.join(d, "v").select(
         "v", (F.col("rank") / F.col("_deg")).alias("_c")
     )
-    if broadcast_ranks:
+    if broadcast:
         c = F.broadcast(c)
     contrib = (
         sym.join(c, sym.src == c.v)
@@ -488,9 +481,10 @@ def hierarchy_flatten(
     have depth 0, so every cycle, a self-loop included, stays pending.
     A round counting 0 found its input resolved, so up to ``rounds +
     1`` joins run, the last only confirming. Up to 15M nodes (3/4 of
-    ``BROADCAST_MAX_VERTICES``, set for a 24 B row; a lookup row is 32
-    B — derived, never run near it) the lookup is broadcast, so a round
-    shuffles nothing.
+    `BROADCAST_MAX_ROWS`, set for a 24 B row; a lookup row is 32 B —
+    derived, never run near it) the lookup is broadcast, so a round
+    shuffles nothing. Tests force the shuffled rounds by patching the
+    constant to 0.
 
     Returns (node, root, depth): depth 0 for roots.
     """
@@ -521,7 +515,7 @@ def hierarchy_flatten(
         )
         state, kept, unresolved = checkpoint(
             state.join(
-                F.broadcast(lookup) if nodes * 4 <= BROADCAST_MAX_VERTICES * 3
+                F.broadcast(lookup) if nodes * 4 <= BROADCAST_MAX_ROWS * 3
                 else lookup,
                 state.ptr == lookup._n,
             ),

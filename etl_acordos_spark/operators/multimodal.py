@@ -122,76 +122,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-RESIZE_SCHEMA = (
-    "doc_id bigint, payload binary, out_width int, out_height int,"
-    " scale double"
-)
-
-
-def resize_images(
-    media: DataFrame, target_width: int = 224, target_height: int = 224
-) -> DataFrame:
-    """Resize plumbing: map each payload to a (stub-)resized payload plus
-    the output geometry. A real implementation swaps `_fake_resize` for
-    PIL/cv2; the Spark shape — binary in, binary out, map-only, metadata
-    columns alongside — is exactly what production needs. Payloads never
-    shuffle: resize runs in the scan's partitions.
-    """
-
-    def _fake_resize(p: bytes) -> bytes:
-        # STUB (no codecs in env): deterministic byte-level downsample
-        # standing in for pixel resampling.
-        step = max(1, len(p) // (target_width * 4))
-        return bytes(p[::step][: target_width * 4])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [_fake_resize(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": resized,
-                    "out_width": target_width,
-                    "out_height": target_height,
-                    "scale": [
-                        round(len(r) / max(len(p), 1), 6)
-                        for r, p in zip(resized, pdf["payload"])
-                    ],
-                }
-            )
-
-    return media.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_md5 string"
-
-
-def sample_frames(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """Frame-sampling plumbing for video-like payloads: one output row
-    per sampled frame (fan-out mapInPandas — the row-multiplying shape a
-    video decoder needs). STUB frames are fixed-size byte windows; a real
-    build decodes keyframes at a timestamp stride instead.
-    """
-    import hashlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, digests = [], [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(p)
-                for i, off in enumerate(range(0, len(b), every_n_bytes)):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    digests.append(
-                        hashlib.md5(b[off : off + every_n_bytes]).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_md5": digests}
-            )
-
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
 # ------------------------------------------------- real PNG decode path
 
 IMAGE_FEATURE_SCHEMA = (

@@ -968,17 +968,19 @@ def bloom_decontaminate(
         )
         .cache()
     )
-    word_rows = (
-        pos_arrays.select(F.explode("ps").alias("p"))
-        .select(
-            F.expr("p div 64").alias("widx"),
-            F.expr("shiftleft(1L, CAST(p % 64 AS INT))").alias("bit"),
+    try:
+        word_rows = (
+            pos_arrays.select(F.explode("ps").alias("p"))
+            .select(
+                F.expr("p div 64").alias("widx"),
+                F.expr("shiftleft(1L, CAST(p % 64 AS INT))").alias("bit"),
+            )
+            .groupBy("widx")
+            .agg(F.expr("bit_or(bit)").alias("word"))
+            .collect()
         )
-        .groupBy("widx")
-        .agg(F.expr("bit_or(bit)").alias("word"))
-        .collect()
-    )
-    pos_arrays.unpersist()
+    finally:
+        pos_arrays.unpersist()
     bits = np.zeros(m // 64, dtype=np.uint64)
     for r in word_rows:
         bits[r["widx"]] = np.uint64(r["word"] & 0xFFFFFFFFFFFFFFFF)
@@ -1255,13 +1257,17 @@ def span_dup_profile(
     )
 
 
+#: distinct-word count up to which `bpe_train` runs its greedy rounds in
+#: the driver; tests force the distributed rounds by patching it to 0
+BPE_DRIVER_VOCAB_MAX = 65536
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str,
     id_col: str,
     n_merges: int = 10,
     min_freq: int = 2,
-    driver_vocab_max: int = 65536,
 ) -> DataFrame:
     """Learn byte-pair-encoding merge rules over the corpus — the
     tokenizer-training job of an LLM data pipeline (Sennrich et al.
@@ -1279,7 +1285,7 @@ def bpe_train(
 
     Branch crossover (r13, the broadcast-crossover idiom): once
     collapsed, the vocabulary is often SMALL — when it holds at most
-    *driver_vocab_max* rows (probe: one count over the checkpointed
+    `BPE_DRIVER_VOCAB_MAX` rows (probe: one count over the checkpointed
     leaf) the greedy rounds run in the DRIVER over the collected
     (syms, freq) rows, exactly the loop real tokenizer trainers run
     single-process over word counts. The 12 distributed rounds at
@@ -1289,7 +1295,8 @@ def bpe_train(
     (short symbol list, count) is a few MB in the driver — the same
     order as a broadcast join's build side. Bit-parity with the
     distributed branch is pinned by
-    tests/test_operators.py::test_bpe_train_distributed_branch_matches_driver_branch
+    tests/test_operators.py::test_bpe_train_distributed_branch_matches_driver_branch,
+    which forces the distributed rounds by patching the constant to 0
     (both branches also match the pure-Python reference BPE).
 
     Past the crossover, each round is: HOF pair-explode → one
@@ -1331,7 +1338,7 @@ def bpe_train(
         "merge_idx int, left string, right string, merged string,"
         " pair_freq bigint"
     )
-    if words.count() <= driver_vocab_max:
+    if words.count() <= BPE_DRIVER_VOCAB_MAX:
         vocab = [
             [list(r["syms"]), int(r["freq"])] for r in words.collect()
         ]

@@ -53,7 +53,6 @@ class MedallionConfig:
     year_source: str | None = None
     year_column: str = "ano"
     keep_columns: list[str] | None = None
-    dates_are_strings: bool = True  # raw dd/MM/yyyy strings vs already-typed
 
 
 def bronze_transform(df: DataFrame, cfg: MedallionConfig) -> DataFrame:
@@ -66,8 +65,7 @@ def bronze_transform(df: DataFrame, cfg: MedallionConfig) -> DataFrame:
     out = normalize_column_names(df)
     exprs: dict[str, Column] = {}
     for c in cfg.date_columns:
-        if cfg.dates_are_strings:
-            exprs[c] = parse_date_ddmmyyyy(trim_ws(c))
+        exprs[c] = parse_date_ddmmyyyy(trim_ws(c))
     for c in cfg.truncate_columns:
         exprs[c] = left_n(trim_ws(c), 255)
     if exprs:

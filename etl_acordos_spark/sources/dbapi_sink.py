@@ -53,6 +53,8 @@ _SQL_TYPES: dict[type, str] = {
 }
 
 _TS = T.TimestampType()
+#: rows bound per ``executemany`` call
+_EXECUTEMANY_ROWS = 1000
 
 
 # Dialect table: identifier quote char, DBAPI placeholder (paramstyle),
@@ -174,7 +176,6 @@ def write_dbapi_upsert(
     table: str,
     connection_factory: Callable[[], Any],
     upsert_key: str,
-    batch_size: int = 1000,
     writer_partitions: int | None = None,
     dialect: str = "ansi",
 ) -> None:
@@ -184,8 +185,7 @@ def write_dbapi_upsert(
     (backtick quoting + ON DUPLICATE KEY UPDATE).
     """
     _write_dbapi(
-        df, table, connection_factory, upsert_key, batch_size,
-        writer_partitions, dialect,
+        df, table, connection_factory, upsert_key, writer_partitions, dialect
     )
 
 
@@ -193,14 +193,12 @@ def write_dbapi_append(
     df: DataFrame,
     table: str,
     connection_factory: Callable[[], Any],
-    batch_size: int = 1000,
     writer_partitions: int | None = None,
     dialect: str = "ansi",
 ) -> None:
     """Batched append (reference tasks/silver.py:95-139 insert loops)."""
     _write_dbapi(
-        df, table, connection_factory, None, batch_size,
-        writer_partitions, dialect,
+        df, table, connection_factory, None, writer_partitions, dialect
     )
 
 
@@ -209,7 +207,6 @@ def _write_dbapi(
     table: str,
     connection_factory: Callable[[], Any],
     upsert_key: str | None,
-    batch_size: int,
     writer_partitions: int | None,
     dialect: str = "ansi",
 ) -> None:
@@ -229,7 +226,7 @@ def _write_dbapi(
     )
     conn = connection_factory()
     try:
-        conn.execute(ddl)
+        conn.cursor().execute(ddl)
         conn.commit()
     finally:
         conn.close()
@@ -247,6 +244,7 @@ def _write_dbapi(
             driver = type(conn).__module__
             if driver not in sys.modules:
                 importlib.import_module(driver)
+            cur = conn.cursor()
             for batch in batches:
                 cols = [
                     [_TS.fromInternal(us) for us in c.cast(pa.int64()).to_pylist()]
@@ -255,8 +253,8 @@ def _write_dbapi(
                     for i, c in enumerate(batch.columns)
                 ]
                 rows = list(zip(*cols))
-                for lo in range(0, len(rows), batch_size):
-                    conn.executemany(sql, rows[lo:lo + batch_size])
+                for lo in range(0, len(rows), _EXECUTEMANY_ROWS):
+                    cur.executemany(sql, rows[lo:lo + _EXECUTEMANY_ROWS])
                 n += len(rows)
             conn.commit()
         finally:

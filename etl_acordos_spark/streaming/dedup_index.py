@@ -83,10 +83,7 @@ def _band_schema(
 
 
 def _load_store(
-    spark: SparkSession,
-    root: str,
-    batch_id: int,
-    probe_last_batches: int | None,
+    spark: SparkSession, root: str, batch_id: int
 ) -> DataFrame | None:
     """Read a store's per-batch subdirectories as they stood BEFORE
     *batch_id* first ran — only subdirectories with batch index <
@@ -106,32 +103,6 @@ def _load_store(
         for e in os.listdir(root)
         if e.startswith("b") and int(e[1:]) < batch_id
     )
-    if probe_last_batches is not None and probe_last_batches < batch_id:
-        # a horizon >= batch_id covers every batch that can exist (all
-        # indices are < batch_id), i.e. the full-history probe — exact
-        # regardless of folding, so no slice and no snapshot guard. Only
-        # a PROPER slice can cover the wrong time range when a snapshot
-        # occupies one directory slot. len(parts) would be the WRONG
-        # test: a snapshot folds many batches into one slot, so slot
-        # count understates the history the slice spans.
-        sliced = parts[-probe_last_batches:]
-        for p in sliced:
-            if os.path.exists(os.path.join(root, p, "_folded.json")):
-                # a compacted snapshot folds many batches into one
-                # directory slot, so a slice CONTAINING one covers a
-                # different time range than "the newest N batches" —
-                # refuse instead of probing the wrong horizon. A
-                # snapshot strictly OLDER than the slice is harmless:
-                # the newest N directories are then genuine per-batch
-                # deltas and the horizon is exact (production aligns
-                # compaction to the horizon; see compact_count_deltas)
-                raise ValueError(
-                    "streaming dedup index: probe_last_batches horizon "
-                    f"overlaps the compacted snapshot {p!r} — expire "
-                    "old batch directories instead of folding them "
-                    "when a freshness horizon is in use"
-                )
-        parts = sliced
     if not parts:
         return None
     return spark.read.parquet(*[os.path.join(root, p) for p in parts])
@@ -152,7 +123,6 @@ def _dedup_index_process_batch(
     threshold: float,
     shingle_n: int,
     max_bucket_size: int,
-    probe_last_batches: int | None,
     hash_fn: str = "xxhash64",
 ) -> None:
     """One microbatch of the dedup-index maintenance loop — module-level
@@ -176,11 +146,9 @@ def _dedup_index_process_batch(
         pin="checkpoint",
         hash_fn=hash_fn,
     ).localCheckpoint(eager=False)
-    corpus = _load_store(spark, kept_dir, batch_id, probe_last_batches)
-    c_bands = _load_store(spark, index_dir, batch_id, probe_last_batches)
-    deltas_so_far = _load_store(
-        spark, counts_dir, batch_id, probe_last_batches
-    )
+    corpus = _load_store(spark, kept_dir, batch_id)
+    c_bands = _load_store(spark, index_dir, batch_id)
+    deltas_so_far = _load_store(spark, counts_dir, batch_id)
     counts = (
         deltas_so_far.groupBy("band_idx", "band_val").agg(
             F.sum("n").alias("n")
@@ -241,7 +209,6 @@ def streaming_dedup_index_run(
     threshold: float = 0.5,
     shingle_n: int = 3,
     max_bucket_size: int = 1000,
-    probe_last_batches: int | None = None,
     hash_fn: str = "xxhash64",
     resume: bool = False,
     on_batch_complete=None,
@@ -251,30 +218,10 @@ def streaming_dedup_index_run(
     ids (lazy read over the kept store, which outlives this call in its
     `microbatch.run_namespace`). Ids must be non-null.
 
-    *probe_last_batches* — optional freshness horizon: probe only the
-    newest N batches' index entries instead of the whole history (the
-    news/feed-dedup contract, where yesterday's near-copy is a dup but
-    last quarter's is legitimate re-reporting). The slice applies to
-    all three stores consistently (index, kept docs, count deltas — the
-    per-batch subdirectory layout IS the horizon structure: expiry is
-    "stop reading old directories", exactly how a date-partitioned
-    production index expires whole partitions). Not compatible with
-    `compact_count_deltas`, which folds history across batch
-    boundaries — enforced at probe time (`_load_store` raises on a
-    compacted snapshot); production aligns compaction to the horizon.
-    Default None = dedup against all history (the fold-equivalence
-    contract).
-
     Delivery, ``resume`` and ``on_batch_complete``: see the
     `streaming.microbatch` contract; the hook fires after all three
     store writes. On a replay, `_load_store`'s ``< batch_id`` cut keeps
     the batch from probing its own prior attempt."""
-    if probe_last_batches is not None and probe_last_batches < 1:
-        # parts[-0:] would silently mean "all history", the opposite of
-        # the caller's intent
-        raise ValueError(
-            "streaming_dedup_index_run: probe_last_batches must be >= 1"
-        )
     run_ns = run_namespace(base_dir, "stream_dedup_index")
     process_batch = functools.partial(
         _dedup_index_process_batch,
@@ -289,7 +236,6 @@ def streaming_dedup_index_run(
         threshold=threshold,
         shingle_n=shingle_n,
         max_bucket_size=max_bucket_size,
-        probe_last_batches=probe_last_batches,
         hash_fn=hash_fn,
     )
     # deterministic delivery order: contiguous ascending id ranges, one

@@ -102,6 +102,29 @@ def test_sink_binds_the_values_a_row_carries(
         assert got_types == STORED_TYPES, mode
 
 
+def test_sink_runs_its_statements_on_a_cursor(spark, tmp_path):
+    """PEP 249 puts ``execute`` and ``executemany`` on cursors; sqlite3
+    and DuckDB add connection shortcuts, PyMySQL does not. A connection
+    with only ``cursor``/``commit``/``close`` must still take the DDL
+    and the rows."""
+    db = str(tmp_path / "cursor_only.db")
+
+    def connect():
+        import sqlite3
+        import types
+
+        conn = sqlite3.connect(db)
+        return types.SimpleNamespace(
+            cursor=conn.cursor, commit=conn.commit, close=conn.close
+        )
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    write_dbapi_upsert(df, "t", connect, "k", writer_partitions=1)
+    with sqlite3.connect(db) as conn:
+        got = conn.execute("SELECT k, v FROM t ORDER BY k").fetchall()
+    assert got == [(1, "a"), (2, "b")]
+
+
 FRESH_WORKER = """
 import functools, os, sqlite3, sys
 sys.path.insert(0, {repo!r})

@@ -717,6 +717,43 @@ def test_bloom_decontaminate_tiny_filter_saturates_to_all_hits(spark):
     assert len(out) == 3
 
 
+def test_bloom_decontaminate_releases_its_pin_when_the_build_fails(
+    spark, monkeypatch
+):
+    """The bitset build caches the eval position arrays; a raising
+    collect must still unpersist them, or the CacheManager entry
+    outlives the call and changes later plans."""
+    from pyspark.storagelevel import StorageLevel
+
+    from etl_acordos_spark.operators.text import bloom_decontaminate
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "g h i j k l")], ["doc_id", "text"]
+    )
+    # the session's concrete DataFrame class (classic or Connect)
+    frame_cls = type(docs)
+    pinned = []
+    real_cache = frame_cls.cache
+
+    def spy_cache(self):
+        pinned.append(self)
+        return real_cache(self)
+
+    def failing_collect(self):
+        raise RuntimeError("simulated build failure")
+
+    monkeypatch.setattr(frame_cls, "cache", spy_cache)
+    monkeypatch.setattr(frame_cls, "collect", failing_collect)
+    try:
+        with pytest.raises(RuntimeError, match="simulated build failure"):
+            bloom_decontaminate(docs, docs, "text", "doc_id")
+        assert pinned
+        assert all(df.storageLevel == StorageLevel.NONE for df in pinned)
+    finally:
+        for df in pinned:
+            df.unpersist()
+
+
 def test_incremental_minhash_dedup_keep_first_semantics(spark):
     """Exact duplicates always share identical signatures, so the LSH
     probe is deterministic: a batch doc duplicating a corpus doc is
@@ -2056,7 +2093,7 @@ def test_hierarchy_flatten_shuffled_rounds_match(spark, monkeypatch):
     roots and depths, and the dropped-node guard still fires."""
     from etl_acordos_spark.operators import graph
 
-    monkeypatch.setattr(graph, "BROADCAST_MAX_VERTICES", 0)
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", 0)
     edges = spark.range(300).select(
         F.col("id").alias("node"),
         F.when(F.col("id") > 0, F.expr("id div 3")).alias("parent"),
@@ -2981,13 +3018,16 @@ def test_fuzzy_decontaminate_flags_cross_set_only(spark):
     assert n == 2 and mj >= 0.5, got[1]
 
 
-def test_bpe_train_distributed_branch_matches_driver_branch(spark):
+def test_bpe_train_distributed_branch_matches_driver_branch(
+    spark, monkeypatch
+):
     """bpe_train auto-selects a driver-side greedy loop when the
     collapsed vocabulary fits in the driver (the broadcast-crossover
-    idiom — r13); past `driver_vocab_max` the distributed per-round
+    idiom — r13); past `BPE_DRIVER_VOCAB_MAX` the distributed per-round
     loop runs instead. Both branches must emit the identical rule list
     (and match the pure-Python reference) on the tie-break/overlap
     corpus."""
+    from etl_acordos_spark.operators import text
     from etl_acordos_spark.operators.text import bpe_train
 
     corpus = [
@@ -3002,11 +3042,10 @@ def test_bpe_train_distributed_branch_matches_driver_branch(spark):
         tuple(r)
         for r in bpe_train(docs, "text", "doc_id", n_merges=8).collect()
     ]
+    monkeypatch.setattr(text, "BPE_DRIVER_VOCAB_MAX", 0)
     distributed = [
         tuple(r)
-        for r in bpe_train(
-            docs, "text", "doc_id", n_merges=8, driver_vocab_max=0
-        ).collect()
+        for r in bpe_train(docs, "text", "doc_id", n_merges=8).collect()
     ]
     assert driver == distributed == _ref_bpe(corpus, 8, 2)
 

@@ -384,16 +384,14 @@ def test_co_occurrence_edge_build_is_join_free(spark, sf_oracle):
 def test_triangle_broadcast_branch_is_adjacency_intersection(
     spark, sf_oracle
 ):
-    """r12 shape pin for the broadcast branch: wedges close via ONE
+    """r12 shape pin for the broadcast branch (the default
+    `BROADCAST_MAX_ROWS` keeps it on this graph): wedges close via ONE
     broadcast of the per-vertex neighbor lists and an array_intersect
     per edge — never the materialized wedge stream (two broadcast edge
     maps), never a sorted or shuffled wedge join."""
     from etl_acordos_spark.operators.graph import triangle_counts
 
-    plan = plan_of(
-        triangle_counts(_graph_edges(spark, sf_oracle), k=20,
-                        broadcast_edges=True)
-    )
+    plan = plan_of(triangle_counts(_graph_edges(spark, sf_oracle), k=20))
     assert "array_intersect" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "ShuffledHashJoin" not in plan, plan
@@ -415,16 +413,20 @@ def test_graph_edge_pins_are_serialized_and_spillable():
     assert not _EDGE_PIN.deserialized, _EDGE_PIN
 
 
-def test_triangle_count_fallback_plan_and_rows(spark, sf_oracle):
-    """`broadcast_edges=False` is the documented beyond-10^8-edge escape
-    hatch (oriented list no longer fits executor memory): the wedge
-    joins degrade to shuffled equi-joins on vertex ids — still NEVER a
-    cartesian/nested-loop — and the result rows must be identical to
-    the broadcast path's."""
-    from etl_acordos_spark.operators.graph import triangle_counts
+def test_triangle_count_fallback_plan_and_rows(
+    spark, sf_oracle, monkeypatch
+):
+    """Past `BROADCAST_MAX_ROWS` oriented edges (r8 calibration: 119.6M
+    edges OOM an 8 GiB heap, so the registry key cannot hard-code the
+    broadcast hint) the count probe demotes the wedge joins to shuffled
+    equi-joins on vertex ids — still NEVER a cartesian/nested-loop —
+    and the result rows must be identical to the broadcast path's."""
+    from etl_acordos_spark.operators import graph
 
     edges = _graph_edges(spark, sf_oracle)
-    fb = triangle_counts(edges, k=20, broadcast_edges=False)
+    expected = sorted(map(tuple, graph.triangle_counts(edges, k=20).collect()))
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", 0)
+    fb = graph.triangle_counts(edges, k=20)
     plan = plan_of(fb)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -435,88 +437,45 @@ def test_triangle_count_fallback_plan_and_rows(spark, sf_oracle):
     # peaked at 41 GiB and finished
     assert "ShuffledHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    expected = triangle_counts(edges, k=20, broadcast_edges=True)
-    assert sorted(map(tuple, fb.collect())) == sorted(
-        map(tuple, expected.collect())
-    )
+    assert sorted(map(tuple, fb.collect())) == expected
 
 
-def test_triangle_count_auto_demotes_past_edge_crossover(spark, sf_oracle):
-    """broadcast_edges=None (the default) must pick the plan by edge
-    count: a tiny broadcast_max_edges forces the shuffled fallback
-    (r8 calibration: 119.6M edges OOM an 8 GiB heap, so the registry
-    key cannot hard-code the broadcast hint), and the rows must equal
-    the broadcast path's."""
-    from etl_acordos_spark.operators.graph import triangle_counts
-
-    edges = _graph_edges(spark, sf_oracle)
-    auto_small = triangle_counts(
-        edges, k=20, broadcast_edges=None, broadcast_max_edges=1
-    )
-    plan = plan_of(auto_small)
-    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
-    expected = triangle_counts(edges, k=20, broadcast_edges=True)
-    assert sorted(map(tuple, auto_small.collect())) == sorted(
-        map(tuple, expected.collect())
-    )
-
-
-def test_pagerank_fallback_plan_and_rows(spark, sf_oracle):
-    """`broadcast_ranks=False` is the beyond-executor-memory vertex-set
-    escape hatch: each iteration's rank join degrades to a shuffled
-    equi-join — never cartesian — with rows identical to the broadcast
-    path (the per-iteration grid-floor makes both bit-stable)."""
-    from etl_acordos_spark.operators.graph import (
-        _pagerank_iteration,
-        pagerank,
-    )
+def test_pagerank_fallback_plan_and_rows(spark, sf_oracle, monkeypatch):
+    """Past `BROADCAST_MAX_ROWS` vertices (the registry key cannot
+    hard-code the broadcast hint past ~20M vertices) each iteration's
+    rank join degrades to a shuffled equi-join — never cartesian. The
+    branch is picked by the free probe off the teleport-term n, the
+    default crossover keeps the broadcast on this graph, and the rows
+    of both branches match (the per-iteration grid-floor makes both
+    bit-stable)."""
+    from etl_acordos_spark.operators import graph
 
     sym, ranks, deg = _pagerank_iteration_frames(spark)
-    plan = plan_of(_pagerank_iteration(sym, ranks, deg, 0.05, 0.85, False))
+    plan = plan_of(
+        graph._pagerank_iteration(sym, ranks, deg, 0.05, 0.85, False)
+    )
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BroadcastHashJoin" not in plan, plan
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
-    edges = _graph_edges(spark, sf_oracle)
-    fb = pagerank(edges, iterations=3, k=20, broadcast_ranks=False)
-    expected = pagerank(edges, iterations=3, k=20, broadcast_ranks=True)
-    assert sorted(map(tuple, fb.collect())) == sorted(
-        map(tuple, expected.collect())
-    )
-
-
-def test_pagerank_auto_demotes_past_vertex_crossover(
-    spark, sf_oracle, monkeypatch
-):
-    """broadcast_ranks=None (the default) must pick the join strategy
-    by vertex count — the free probe off the teleport-term n. A tiny
-    broadcast_max_vertices forces the shuffled fallback (the registry
-    key cannot hard-code the broadcast hint past ~20M vertices), the
-    default crossover keeps the broadcast on this graph, and the rows
-    must match (per-iteration grid-floor keeps both bit-stable)."""
-    from etl_acordos_spark.operators import graph
 
     seen = []
     orig = graph._pagerank_iteration
 
-    def spy(sym, ranks, deg, base, damping, broadcast_ranks):
-        seen.append(broadcast_ranks)
-        return orig(sym, ranks, deg, base, damping, broadcast_ranks)
+    def spy(sym, ranks, deg, base, damping, broadcast):
+        seen.append(broadcast)
+        return orig(sym, ranks, deg, base, damping, broadcast)
 
     monkeypatch.setattr(graph, "_pagerank_iteration", spy)
     edges = _graph_edges(spark, sf_oracle)
-    auto_small = sorted(
-        map(
-            tuple,
-            graph.pagerank(
-                edges, iterations=3, k=20, broadcast_max_vertices=1
-            ).collect(),
-        )
-    )
-    assert seen == [False, False, False], seen
-    seen.clear()
     auto_big = sorted(
         map(tuple, graph.pagerank(edges, iterations=3, k=20).collect())
     )
     assert seen == [True, True, True], seen
+    seen.clear()
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", 0)
+    auto_small = sorted(
+        map(tuple, graph.pagerank(edges, iterations=3, k=20).collect())
+    )
+    assert seen == [False, False, False], seen
     assert auto_small == auto_big

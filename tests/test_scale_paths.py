@@ -1,6 +1,5 @@
 """Scale-path tests: partition pruning on partitioned layer writes,
-multimodal resize/frame-sample plumbing, streaming late-data dropping
-across real microbatches.
+streaming late-data dropping across real microbatches.
 """
 
 from __future__ import annotations
@@ -12,11 +11,6 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from etl_acordos_spark.operators.multimodal import (
-    attach_binary_payload,
-    resize_images,
-    sample_frames,
-)
 from etl_acordos_spark.queries.base import read_events, scratch_dir, t
 from etl_acordos_spark.sources.parquet_io import write_parquet_layer
 
@@ -55,33 +49,6 @@ def test_partitioned_layer_write_prunes(spark, sf_smoke):
     n_filtered = back.filter(F.col("ano") == one_year).count()
     n_dir = spark.read.parquet(os.path.join(path, years[0])).count()
     assert n_filtered == n_dir
-
-
-def test_resize_plumbing(spark, sf_smoke):
-    media = attach_binary_payload(
-        t(spark, sf_smoke, "documents"), "doc_id"
-    )
-    out = resize_images(media, target_width=64).limit(50).collect()
-    assert all(r["out_width"] == 64 for r in out)
-    assert all(0 < r["scale"] <= 1.0 or r["scale"] >= 1.0 for r in out)
-    # deterministic rerun
-    out2 = resize_images(media, target_width=64).limit(50).collect()
-    assert sorted(map(repr, out)) == sorted(map(repr, out2))
-
-
-def test_frame_sampling_fanout(spark, sf_smoke):
-    media = attach_binary_payload(
-        t(spark, sf_smoke, "documents"), "doc_id"
-    )
-    frames = sample_frames(media, every_n_bytes=64)
-    per_doc = frames.groupBy("doc_id").count()
-    joined = per_doc.join(
-        media.select("doc_id", F.octet_length(F.col("payload")).alias("nb")),
-        "doc_id",
-    ).collect()
-    for r in joined:
-        want = (r["nb"] + 63) // 64
-        assert r["count"] == want, f"doc {r['doc_id']}: {r['count']} != {want}"
 
 
 def test_streaming_watermark_advances_across_microbatches(spark, sf_smoke):

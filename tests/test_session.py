@@ -4,7 +4,10 @@ they found it."""
 
 from __future__ import annotations
 
+import ast
 import glob
+import importlib
+import inspect
 import os
 import re
 from pathlib import Path
@@ -90,6 +93,62 @@ def test_foreach_batch_has_one_home():
         and rel != runner
     )
     assert copies == [], copies
+
+
+def _package_names(tree: ast.AST) -> dict:
+    """Local name -> object for every `etl_acordos_spark` import in
+    *tree*, function-level imports included."""
+    names = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (
+            node.module or ""
+        ).startswith("etl_acordos_spark"):
+            for a in node.names:
+                try:
+                    obj = importlib.import_module(f"{node.module}.{a.name}")
+                except ModuleNotFoundError:
+                    obj = getattr(importlib.import_module(node.module), a.name)
+                names[a.asname or a.name] = obj
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.startswith("etl_acordos_spark") and a.asname:
+                    names[a.asname] = importlib.import_module(a.name)
+    return names
+
+
+def test_tools_pass_only_keywords_their_callees_take():
+    """Nothing runs `tools/*.py` or `bench.py` in the suite, so a keyword
+    an operator no longer takes would only fail at 100x: every keyword a
+    call into an imported `etl_acordos_spark` name passes must be a
+    parameter of the callee."""
+    stale = []
+    scripts = sorted((REPO_ROOT / "tools").glob("*.py"))
+    for path in scripts + [REPO_ROOT / "bench.py"]:
+        tree = ast.parse(path.read_text())
+        names = _package_names(tree)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or not node.keywords:
+                continue
+            func = node.func
+            if isinstance(func, ast.Name):
+                callee = names.get(func.id)
+            elif isinstance(func, ast.Attribute) and isinstance(
+                func.value, ast.Name
+            ) and inspect.ismodule(names.get(func.value.id)):
+                callee = getattr(names[func.value.id], func.attr, None)
+            else:
+                continue
+            if not callable(callee):
+                continue
+            params = inspect.signature(callee).parameters
+            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+                continue
+            stale += [
+                f"{path.name}:{node.lineno} {kw.arg}"
+                for kw in node.keywords
+                if kw.arg is not None and kw.arg not in params
+            ]
+    assert stale == [], stale
 
 
 def _jvm_wchar() -> int:

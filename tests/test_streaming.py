@@ -224,11 +224,12 @@ def test_stream_dedup_index_count_compaction(spark, monkeypatch):
     counts_dir = os.path.join(run_ns, "bucket_counts")
     counts_glob = os.path.join(counts_dir, "b*")
 
-    def totals():
+    def totals(counts=None):
+        if counts is None:
+            counts = spark.read.parquet(counts_glob)
         return {
             (r["band_idx"], r["band_val"]): r["total"]
-            for r in spark.read.parquet(counts_glob)
-            .groupBy("band_idx", "band_val")
+            for r in counts.groupBy("band_idx", "band_val")
             .agg(F.sum("n").alias("total"))
             .collect()
         }
@@ -259,6 +260,8 @@ def test_stream_dedup_index_count_compaction(spark, monkeypatch):
     dirs = [d for d in os.listdir(counts_dir) if d.startswith("b")]
     assert len(dirs) == 2  # snapshot + the newest (replayable) delta
     assert totals() == before
+    # the probe reads the folded snapshot like any per-batch delta
+    assert totals(M._load_store(spark, counts_dir, 99)) == before
     assert M.compact_count_deltas(spark, run_ns) == 0
 
 
@@ -415,9 +418,9 @@ def test_write_id_range_batches_empty_input(spark):
 
 
 @pytest.mark.slow  # r13: >=15 s — slow tier
-def test_stream_dedup_index_freshness_horizon(spark):
-    """probe_last_batches=1: a later batch's copy of a doc OUTSIDE the
-    horizon is re-admitted; a copy of a doc inside it is still dropped."""
+def test_stream_dedup_index_probes_full_history(spark):
+    """A later batch's copy of a doc is dropped however many batches
+    back the original arrived: the probe reads every earlier batch."""
     import tempfile
 
     from etl_acordos_spark.streaming.dedup_index import (
@@ -432,30 +435,26 @@ def test_stream_dedup_index_freshness_horizon(spark):
         (2, uniq[2]),
         (3, uniq[3]),
         (4, text_b),
-        (5, uniq[2]),  # copy of doc 2 (previous batch, inside any horizon)
+        (5, uniq[2]),  # copy of doc 2 — one batch back
         (6, uniq[6]),
-        (7, text_a),  # copy of doc 1 — two batches back, outside horizon 1
-        (8, text_b),  # copy of doc 4 — one batch back, inside horizon 1
+        (7, text_a),  # copy of doc 1 — two batches back
+        (8, text_b),  # copy of doc 4 — one batch back
         (9, uniq[9]),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    def run(**kw):
-        return sorted(
-            r[0]
-            for r in streaming_dedup_index_run(
-                spark,
-                docs,
-                "text",
-                "doc_id",
-                tempfile.mkdtemp(prefix="sdi_ttl_"),
-                n_batches=3,
-                **kw,
-            ).collect()
-        )
-
-    assert run() == [1, 2, 3, 4, 6, 9]  # full history: 5, 7, 8 all dups
-    assert run(probe_last_batches=1) == [1, 2, 3, 4, 6, 7, 9]
+    kept = sorted(
+        r[0]
+        for r in streaming_dedup_index_run(
+            spark,
+            docs,
+            "text",
+            "doc_id",
+            tempfile.mkdtemp(prefix="sdi_hist_"),
+            n_batches=3,
+        ).collect()
+    )
+    assert kept == [1, 2, 3, 4, 6, 9]  # 5, 7, 8 all dups
 
 
 @pytest.mark.slow  # r13: >=15 s — slow tier
@@ -516,7 +515,6 @@ def test_stream_dedup_index_replay_is_idempotent(spark):
         threshold=0.5,
         shingle_n=3,
         max_bucket_size=1000,
-        probe_last_batches=None,
     )
     after = sorted(
         r[0] for r in spark.read.parquet(kept_glob).select("doc_id").collect()
@@ -530,46 +528,6 @@ def test_stream_dedup_index_replay_is_idempotent(spark):
         .collect()
     }
     assert counts_after == counts_before
-
-
-@pytest.mark.slow  # r13: >=15 s — slow tier
-def test_stream_dedup_horizon_rejects_compacted_snapshot(spark):
-    """A freshness horizon over a compacted count store would silently
-    cover the wrong time range — the probe must refuse instead."""
-    import os
-    import tempfile
-
-    import pytest
-
-    from etl_acordos_spark.streaming.dedup_index import (
-        _load_store,
-        compact_count_deltas,
-        streaming_dedup_index_run,
-    )
-
-    rows = [
-        (i, " ".join(f"g{i}w{j}" for j in range(25))) for i in range(8)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    base = tempfile.mkdtemp(prefix="sdi_grd_")
-    streaming_dedup_index_run(
-        spark, docs, "text", "doc_id", base, n_batches=4
-    ).collect()
-    run_ns = os.path.join(base, f"stream_dedup_index_{os.getpid()}")
-    assert compact_count_deltas(spark, run_ns) == 3
-    counts_dir = os.path.join(run_ns, "bucket_counts")
-    # un-horizoned probe still reads the folded snapshot fine
-    assert _load_store(spark, counts_dir, 99, None).count() > 0
-    with pytest.raises(ValueError, match="compacted snapshot"):
-        _load_store(spark, counts_dir, 99, 2)
-    # ...but a snapshot strictly OLDER than the horizon slice is
-    # harmless: the newest-1 directory is a genuine per-batch delta, so
-    # the horizon is exact and the probe must NOT refuse
-    assert _load_store(spark, counts_dir, 99, 1).count() > 0
-    # ...and a horizon >= batch_id covers every batch that can exist,
-    # so it IS the (exact) full-history probe — must not refuse either,
-    # snapshot or no snapshot
-    assert _load_store(spark, counts_dir, 4, 99).count() > 0
 
 
 @pytest.mark.slow  # r13: >=15 s — slow tier

@@ -36,6 +36,7 @@ import os
 import sys
 import time
 from contextlib import redirect_stdout
+from unittest import mock
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_ROOT not in sys.path:
@@ -86,11 +87,8 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from etl_acordos_spark.operators.graph import (
-        co_occurrence_edges,
-        pagerank,
-        triangle_counts,
-    )
+    from etl_acordos_spark.operators import graph
+    from etl_acordos_spark.operators.graph import co_occurrence_edges
     from etl_acordos_spark.queries.relational import (
         q_ext_pagerank,
         q_ext_triangle_count,
@@ -119,11 +117,11 @@ def main() -> None:
             li, "l_orderkey", "l_partkey", max_group_size=1000
         )
         t0 = time.perf_counter()
-        pr = pagerank(
-            edges, iterations=10, damping=0.85, k=20,
-            broadcast_ranks=False,
-        ).withColumnRenamed("vertex", "p_partkey")
-        pr.write.format("noop").mode("overwrite").save()
+        with mock.patch.object(graph, "BROADCAST_MAX_ROWS", 0):
+            pr = graph.pagerank(
+                edges, iterations=10, damping=0.85, k=20
+            ).withColumnRenamed("vertex", "p_partkey")
+            pr.write.format("noop").mode("overwrite").save()
         t_shuf = time.perf_counter() - t0
         results["pagerank_forced_shuffle"] = {"t_100x": round(t_shuf, 3)}
         print(json.dumps(
