@@ -440,14 +440,39 @@ def test_triangle_count_fallback_plan_and_rows(
     assert sorted(map(tuple, fb.collect())) == expected
 
 
+def test_triangle_count_auto_demotes_past_edge_crossover(
+    spark, sf_oracle, monkeypatch
+):
+    """The branch is picked by oriented-edge count against
+    `BROADCAST_MAX_ROWS`, inclusive: a crossover equal to the edge
+    count keeps the adjacency-intersection broadcast, one below it
+    demotes to the shuffled wedge joins, and the rows of both match."""
+    from etl_acordos_spark.operators import graph
+
+    edges = _graph_edges(spark, sf_oracle)
+    m = edges.count()
+    assert m > 0
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", m)
+    at = graph.triangle_counts(edges, k=20)
+    plan = plan_of(at)
+    assert "array_intersect" in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", m - 1)
+    past = graph.triangle_counts(edges, k=20)
+    plan = plan_of(past)
+    assert "ShuffledHashJoin" in plan, plan
+    assert "array_intersect" not in plan, plan
+    assert sorted(map(tuple, past.collect())) == sorted(
+        map(tuple, at.collect())
+    )
+
+
 def test_pagerank_fallback_plan_and_rows(spark, sf_oracle, monkeypatch):
     """Past `BROADCAST_MAX_ROWS` vertices (the registry key cannot
     hard-code the broadcast hint past ~20M vertices) each iteration's
-    rank join degrades to a shuffled equi-join — never cartesian. The
-    branch is picked by the free probe off the teleport-term n, the
-    default crossover keeps the broadcast on this graph, and the rows
-    of both branches match (the per-iteration grid-floor makes both
-    bit-stable)."""
+    rank join degrades to a shuffled equi-join — never cartesian — with
+    rows identical to the broadcast path (the per-iteration grid-floor
+    makes both bit-stable)."""
     from etl_acordos_spark.operators import graph
 
     sym, ranks, deg = _pagerank_iteration_frames(spark)
@@ -458,6 +483,27 @@ def test_pagerank_fallback_plan_and_rows(spark, sf_oracle, monkeypatch):
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BroadcastHashJoin" not in plan, plan
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
+    edges = _graph_edges(spark, sf_oracle)
+    expected = sorted(
+        map(tuple, graph.pagerank(edges, iterations=3, k=20).collect())
+    )
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", 0)
+    fb = graph.pagerank(edges, iterations=3, k=20)
+    assert sorted(map(tuple, fb.collect())) == expected
+
+
+def test_pagerank_auto_demotes_past_vertex_crossover(
+    spark, sf_oracle, monkeypatch
+):
+    """The join strategy is picked by vertex count — the free probe off
+    the teleport-term n — against `BROADCAST_MAX_ROWS`, inclusive: the
+    default crossover and one equal to n keep every iteration
+    broadcast, one below n demotes every iteration to the shuffled
+    joins, and the rows match (per-iteration grid-floor keeps both
+    bit-stable)."""
+    from pyspark.sql import functions as F
+
+    from etl_acordos_spark.operators import graph
 
     seen = []
     orig = graph._pagerank_iteration
@@ -472,8 +518,18 @@ def test_pagerank_fallback_plan_and_rows(spark, sf_oracle, monkeypatch):
         map(tuple, graph.pagerank(edges, iterations=3, k=20).collect())
     )
     assert seen == [True, True, True], seen
+    n = (
+        edges.select(F.col("src").alias("v"))
+        .union(edges.select(F.col("dst").alias("v")))
+        .distinct()
+        .count()
+    )
     seen.clear()
-    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", n)
+    graph.pagerank(edges, iterations=3, k=20)
+    assert seen == [True, True, True], seen
+    seen.clear()
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", n - 1)
     auto_small = sorted(
         map(tuple, graph.pagerank(edges, iterations=3, k=20).collect())
     )
