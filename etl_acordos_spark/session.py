@@ -182,52 +182,3 @@ def one_shot_stream_conf(spark: SparkSession) -> dict[str, str]:
             min(4, spark.sparkContext.defaultParallelism)
         )
     }
-
-
-def skew_profile(
-    hot_block_raw_bytes: int,
-    compression_ratio: float = 20.0,
-    target_splits: int = 16,
-) -> dict[str, str]:
-    """``extra_conf`` preset encoding the round-11 skew adjudication
-    (BASELINE.md "Round-11 skew stress extended to 30x").
-
-    AQE's skew-split detector reads COMPRESSED shuffle bytes. A hot
-    partition whose rows share one join key is pathologically
-    compressible (~20-30x measured on the Zipf tile), so a 280 MB raw
-    hot block can hide under a 16 MB compressed reading and never trip
-    the default 256 MB threshold. This preset sizes the three knobs
-    against compressed reality:
-
-    - ``skewedPartitionThresholdInBytes`` / ``advisoryPartitionSizeInBytes``
-      = compressed hot-block size / *target_splits* (floor 64 KB), so
-      the detector fires AND the split advisory actually carves it;
-    - ``spark.sql.files.maxPartitionBytes`` lowered so the scan yields
-      enough map outputs — split granularity is capped by map-output
-      count (a 2-file input can split a reduce partition at most ~2
-      ways no matter the thresholds).
-
-    With the r11 measurements (raw hot block 280 MB, ratio ~20, 16
-    splits) this reproduces the adjudication ladder exactly —
-    threshold/advisory ~1 MB, maxPartitionBytes 16 MB — which
-    collapsed the measured 30x skew ratio 1.766 -> 1.160. Estimate
-    *hot_block_raw_bytes* as hot-key row count x average row width;
-    when the ratio is unknown, 20 is the measured floor for a
-    constant-key block (overshooting the ratio only makes splits
-    finer). For keys too hot even for splitting, use
-    ``operators.relational.salted_join`` (reads 0.78 on the same tile
-    with no tuning).
-    """
-    compressed = max(1, int(hot_block_raw_bytes / compression_ratio))
-    piece = max(64 * 1024, compressed // target_splits)
-    scan_bytes = min(134217728, max(piece * target_splits, 16 * 1024 * 1024))
-    return {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": str(
-            piece
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(piece),
-        "spark.sql.files.maxPartitionBytes": str(scan_bytes),
-    }

@@ -303,47 +303,22 @@ def incremental_upsert_run(
 
     Per microbatch: reduce the batch to one row per key (latest by
     (ts, event_id) — a total order, so out-of-order delivery across
-    batches cannot flip the result), then merge against the current
-    snapshot by the same order and atomically swap the snapshot
-    directory. At 100 TB the swap becomes a table-format MERGE
-    (Delta/Iceberg) scoped to the partitions a batch touches; the
-    per-batch plan — reduce, co-partitioned merge join, partition-local
-    rewrite — is exactly this one. Delivery follows the
+    batches cannot flip the result) and store it as the batch's own
+    delta (`store_batch` under ``deltas``), so a batch writes only its
+    own rows and a replay overwrites its prior attempt. Once the stream
+    is done, the run settles: the latest row per key over every delta,
+    by the same order, overwrites the flat ``lake`` snapshot. At
+    100 TB the settle becomes a table-format MERGE (Delta/Iceberg)
+    scoped to the partitions the deltas touch. Delivery follows the
     `streaming.microbatch` contract (no resume here).
     """
     import os
-    import shutil
 
-    from pyspark.sql import Window
+    from etl_acordos_spark.operators.relational import top_k_per_group
 
     run_ns = run_namespace(base_dir, "stream_upsert")
-    lake = os.path.join(run_ns, "lake")
-    latest_order = [F.col("ts").desc(), F.col("event_id").desc()]
-
-    def latest_per_user(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy(*latest_order)
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        upserts = latest_per_user(batch)
-        if os.path.exists(lake):
-            merged = latest_per_user(
-                spark.read.parquet(lake).unionByName(upserts)
-            )
-        else:
-            merged = upserts
-        tmp = f"{lake}_v{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = f"{lake}_old{batch_id}"
-        if os.path.exists(lake):
-            os.rename(lake, old)
-        os.rename(tmp, lake)
-        shutil.rmtree(old, ignore_errors=True)
-
+    deltas = os.path.join(run_ns, "deltas")
+    latest = [F.col("ts").desc(), F.col("event_id").desc()]
     run_microbatches(
         spark,
         "incremental_upsert_run",
@@ -351,8 +326,16 @@ def incremental_upsert_run(
         lambda src: events.select("event_id", "user_id", "ts", "value")
         .repartition(n_batches)
         .write.parquet(src),
-        merge_batch,
+        lambda batch, batch_id: store_batch(
+            top_k_per_group(batch, ["user_id"], latest, 1).drop("rnk"),
+            deltas,
+            batch_id,
+        ),
     )
+    lake = os.path.join(run_ns, "lake")
+    top_k_per_group(
+        read_batches(spark, deltas), ["user_id"], latest, 1
+    ).drop("rnk").write.mode("overwrite").parquet(lake)
     return spark.read.parquet(lake)
 
 

@@ -30,7 +30,9 @@ Delivery contract, the same for every pipeline above:
     prior attempt instead of appending twice. ``mode("overwrite")`` is
     delete-then-write, not an atomic rename: a crash mid-write leaves a
     partial directory that the replayed batch rewrites. Settled reads
-    glob every batch (`read_batches`).
+    glob every batch (`read_batches`); the upsert folds its deltas into
+    its snapshot once, after the run returns, so no batch rewrites
+    another batch's rows.
   - Resume: ``resume=True`` restarts an interrupted run against its
     existing source, stores and checkpoint, without seeding; the
     engine's offset log redelivers every uncommitted batch. Resuming a

@@ -33,6 +33,7 @@ import math
 import pytest
 
 import __spark_entry__ as contract
+from etl_acordos_spark.session import scoped_conf
 from tools.degenerate_fixtures import build_fixture
 
 ALL_KEYS = sorted(contract.queries())
@@ -93,3 +94,13 @@ def test_degenerate_inputs(spark, degenerate_dirs, key):
         assert empty_schema == onerow_schema, (
             f"{key}: declared schema degrades on empty input"
         )
+
+
+def test_build_fixture_leaves_nanos_as_long_as_it_was(spark, tmp_path):
+    """A fixture build copies events under ``nanosAsLong`` but restores
+    the session's setting afterwards: the degenerate sweep shares its
+    session with every other test."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    with scoped_conf(spark, {key: "false"}):
+        build_fixture(spark, str(tmp_path / "onerow"), 1)
+        assert spark.conf.get(key) == "false"

@@ -135,78 +135,3 @@ def test_salted_join_equals_plain_on_skewed_input(spark, skewed_fact, dim):
     )
     assert spread.count() == 8
 
-
-def test_skew_profile_reproduces_r11_ladder():
-    """The preset fed the r11 measurements must emit the adjudication
-    ladder that collapsed the 30x ratio 1.766 -> 1.160 (BASELINE.md):
-    threshold/advisory ~1 MB (compressed scale), maxPartitionBytes
-    16 MB (map-output granularity)."""
-    from etl_acordos_spark.session import skew_profile
-
-    conf = skew_profile(
-        hot_block_raw_bytes=280 * 1024 * 1024,
-        compression_ratio=20.0,
-        target_splits=16,
-    )
-    thr = int(
-        conf["spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"]
-    )
-    assert conf["spark.sql.adaptive.advisoryPartitionSizeInBytes"] == str(thr)
-    assert 512 * 1024 <= thr <= 2 * 1024 * 1024, thr  # ~1 MB
-    assert conf["spark.sql.files.maxPartitionBytes"] == str(16 * 1024 * 1024)
-    assert conf["spark.sql.adaptive.skewJoin.enabled"] == "true"
-    # floor: a tiny hot block still yields a sane (64 KB) threshold
-    tiny = skew_profile(hot_block_raw_bytes=1024)
-    assert (
-        int(
-            tiny[
-                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-            ]
-        )
-        == 64 * 1024
-    )
-
-
-def test_skew_profile_confs_engage_the_split(spark, skewed_fact, dim):
-    """Mechanism replay through the preset: the same skewed join that
-    AQE ignores at production thresholds gets skew-split when the
-    session runs the skew_profile confs (sized for the test volume's
-    raw hot block). Same observability caveats as
-    test_aqe_skew_join_split_engages: broadcast off so a join exists
-    to split, coalescing off so the marker survives at tiny volume."""
-    from etl_acordos_spark.session import skew_profile
-
-    hot_rows = int(HOT_FRAC * N_FACT)
-    profile = skew_profile(
-        hot_block_raw_bytes=hot_rows * 16,  # two longs per row
-        compression_ratio=1.0,  # test rows are unique ids: incompressible
-        target_splits=8,
-    )
-    confs = {
-        **{
-            k: v
-            for k, v in profile.items()
-            # runtime-settable subset; maxPartitionBytes is scan conf
-            # and the fixture is an in-memory checkpoint anyway
-            if k != "spark.sql.files.maxPartitionBytes"
-        },
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.coalescePartitions.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        joined = skewed_fact.join(dim, "k").select(
-            (F.col("v") + F.col("w")).alias("s")
-        )
-        n = len(joined.collect())
-        assert n == N_FACT
-        plan = explain_str(joined)
-        assert "isFinalPlan=true" in plan, plan
-        assert "skew=true" in plan, (
-            "skew_profile confs did not engage the AQE split:\n" + plan
-        )
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)

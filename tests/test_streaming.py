@@ -885,3 +885,39 @@ def test_upsert_delivers_batch_i_from_the_ith_part_file(spark, tmp_path):
             with open(log) as f:
                 entries = [json.loads(ln) for ln in f.read().splitlines()[1:]]
             assert [os.path.basename(e["path"]) for e in entries] == [parts[i]]
+
+
+@pytest.mark.parametrize("n", [4, 16])
+def test_upsert_batch_stores_only_its_own_users(spark, tmp_path, n):
+    """Batch *i* of the upsert stores one row per user of source
+    part-file *i*, as its own delta ``deltas/b{i:05d}``, and nothing
+    else; the settled ``lake`` holds, as flat part-files, exactly the
+    latest row per user over the whole stream (``ts`` desc, then
+    ``event_id`` desc, which breaks the ``ts`` ties the feed carries)."""
+    import os
+
+    from etl_acordos_spark.streaming.events import incremental_upsert_run
+
+    events = spark.range(400).selectExpr(
+        "id AS event_id",
+        "id % 37 AS user_id",
+        "timestamp_seconds(1700000000 + id * 7919 % 200) AS ts",
+        "cast(id AS double) AS value",
+    )
+    incremental_upsert_run(spark, events, str(tmp_path), n_batches=n)
+    run_ns = os.path.join(str(tmp_path), f"stream_upsert_{os.getpid()}")
+    src = os.path.join(run_ns, "src")
+    parts = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    assert len(parts) == n
+    for i, part in enumerate(parts):
+        users = spark.read.parquet(os.path.join(src, part)).select("user_id")
+        delta = spark.read.parquet(os.path.join(run_ns, "deltas", f"b{i:05d}"))
+        assert sorted(r.user_id for r in delta.collect()) == sorted(
+            r.user_id for r in users.distinct().collect()
+        ), f"batch {i}"
+    want = {}
+    for r in sorted(events.collect(), key=lambda r: (r.ts, r.event_id)):
+        want[r.user_id] = r.asDict()
+    got = spark.read.parquet(os.path.join(run_ns, "lake", "*.parquet")).collect()
+    assert len(got) == len(want)
+    assert {r.user_id: r.asDict() for r in got} == want

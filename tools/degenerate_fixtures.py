@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from etl_acordos_spark.session import scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -42,13 +44,14 @@ def build_fixture(spark: SparkSession, out_dir: str, n_rows: int) -> str:
     os.makedirs(out_dir, exist_ok=True)
     # events ships TIMESTAMP(NANOS); read it the way the queries do
     # (raw int64 nanos) so the fixture preserves the bigint-ts shape
-    # that read_events() normalizes
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for name in TABLES:
-        df = spark.read.parquet(os.path.join(SOURCE_SF, f"{name}.parquet"))
-        df.limit(n_rows).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"{name}.parquet")
-        )
+    # that read_events() normalizes. The writes run inside the scope:
+    # Spark reads the conf again when the copy executes.
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
+        for name in TABLES:
+            df = spark.read.parquet(os.path.join(SOURCE_SF, f"{name}.parquet"))
+            df.limit(n_rows).coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"{name}.parquet")
+            )
     with open(marker, "w") as fh:
         fh.write(f"rows={n_rows}\n")
     return out_dir

@@ -69,13 +69,14 @@ def _spark():
 def build(spark) -> None:
     from pyspark.sql import functions as F
 
+    from etl_acordos_spark.session import scoped_conf
+
     marker = os.path.join(OUT_DIR, "_SKEW_OK")
     if os.path.exists(marker):
         print(f"reusing {OUT_DIR}")
         return
     shutil.rmtree(OUT_DIR, ignore_errors=True)
     os.makedirs(OUT_DIR, exist_ok=True)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def rd(name):
         return spark.read.parquet(os.path.join(SRC_DIR, f"{name}.parquet"))
@@ -135,10 +136,14 @@ def build(spark) -> None:
         ),
         "documents",
     )
-    for name in TABLES:
-        if name in ("lineitem", "orders", "documents"):
-            continue
-        wr(rd(name), name)
+    # events may ship TIMESTAMP(NANOS): copy it as raw int64 nanos. The
+    # writes run inside the scope: Spark reads the conf again when the
+    # copy executes.
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
+        for name in TABLES:
+            if name in ("lineitem", "orders", "documents"):
+                continue
+            wr(rd(name), name)
     with open(marker, "w") as fh:
         fh.write(f"hot_frac={HOT_FRAC}\n")
     print(f"wrote {OUT_DIR}")
