@@ -417,7 +417,6 @@ def bloom_semi_join(
     key: str,
     m_bits: int = 1 << 16,
     k_hashes: int = 3,
-    prefilter_only: bool = False,
 ) -> DataFrame:
     """Semi-join *big* to *small* with a map-side Bloom pre-filter —
     the runtime-row-level-filtering shape (Spark's AQE injects this
@@ -446,6 +445,17 @@ def bloom_semi_join(
     and the pre-filter would silently kill every true match (the
     closing join cannot resurrect filtered rows).
     """
+    return _bloom_prefilter(big, small, key, m_bits, k_hashes).join(
+        F.broadcast(small.select(key).distinct()), key, "left_semi"
+    )
+
+
+def _bloom_prefilter(
+    big: DataFrame, small: DataFrame, key: str, m_bits: int, k_hashes: int
+) -> DataFrame:
+    """The rows of *big* whose *key* the Bloom filter of *small*'s keys
+    admits: every true match plus the false positives that
+    `bloom_semi_join`'s closing join removes."""
     if m_bits % 64 != 0:
         # a ragged word array under-allocates the tail word: rows
         # hashing there would probe element_at -> NULL -> dropped
@@ -488,18 +498,10 @@ def bloom_semi_join(
         )
 
     probe = " AND ".join(bit_test(s) for s in range(k_hashes))
-    prefiltered = (
+    return (
         big.withColumn("_bloom_words", F.lit(words))
         .filter(F.expr(probe))
         .drop("_bloom_words")
-    )
-    if prefilter_only:
-        # the Bloom-admitted superset (true matches + FPs), before the
-        # exact closing join — for FP-rate measurement and for callers
-        # staging the exact check elsewhere
-        return prefiltered
-    return prefiltered.join(
-        F.broadcast(small.select(key).distinct()), key, "left_semi"
     )
 
 

@@ -7,8 +7,8 @@ the driver plans, executors run partitioned tasks, and all intra-layer
 ordering falls out of lazy evaluation. `get_spark` is the one place a
 session is built — tests, ``bench.py``, ``perfbench`` and every
 ``tools/*.py`` go through it, so what is timed is what is verified; a
-tool that needs a different shape (``tools/graph_100x.py``'s spill dir,
-zstd and 256 partitions) passes it as ``extra_conf``.
+tool that needs a different shape (``tools/graph_100x.py``'s spill dir
+and 256 partitions) passes it as ``extra_conf``.
 
 Defaults are chosen for correctness-at-scale first:
   - AQE on (runtime partition coalescing, skew-join splitting, join
@@ -24,6 +24,9 @@ Defaults are chosen for correctness-at-scale first:
   - one shuffle file write per map task
     (``spark.shuffle.sort.bypassMergeThreshold=0``, which turns off the
     bypass-merge writer; the comment at the setting says why).
+  - zstd for every byte stream the JVM writes: the Arrow IPC stream to
+    Python workers, shuffle and broadcast blocks, and Parquet files
+    (the comments at the settings give the measured reasons).
   - on ``local`` masters only, the ``file:`` scheme bound to
     ``jvm/InJvmLocalFileSystem.java`` (the committed
     ``jvm/in-jvm-local-fs.jar`` on the driver class path) for both the
@@ -89,6 +92,20 @@ def get_spark(
         # pointers in memory and writes (or renames) one file per map
         # task.
         "spark.shuffle.sort.bypassMergeThreshold": "0",
+        # zstd on the Arrow IPC stream the JVM writes to Python workers
+        # (mapInArrow, mapInPandas, applyInPandas, toPandas); pyarrow
+        # decompresses it on read. Uncompressed, the four perfbench gold
+        # tables cross to the DBAPI sink's worker as 2.9 MB of Arrow;
+        # zstd sends 0.66 MB in the same time. lz4 sends 0.80 MB and
+        # makes the sink four times slower.
+        "spark.sql.execution.arrow.compression.codec": "zstd",
+        # zstd for shuffle and broadcast blocks: a lake_writes pass
+        # shuffles 1.1 MB where lz4 shuffled 2.3 MB, and the ~98 GiB raw
+        # wedge shuffle of tools/graph_100x.py roughly halves on disk.
+        "spark.io.compression.codec": "zstd",
+        # zstd for every Parquet file: a lake_writes pass writes 0.79 MB
+        # of layers where snappy wrote 1.08 MB.
+        "spark.sql.parquet.compression.codec": "zstd",
         # Managed (e.g. bucketed) tables land in scratch, not the repo.
         "spark.sql.warehouse.dir": os.environ.get(
             "SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"

@@ -12,10 +12,12 @@ Spark-first re-expression:
     batched ``executemany`` statements — O(partitions) round-trips
     instead of O(rows) — then commits once and returns its row count.
     Arrow batches are columnar and cross the JVM → Python-worker socket
-    unpickled, so the transport writes fewer bytes and the worker builds
-    each row tuple with one ``zip`` instead of unpickling a ``Row``
-    object per row. The values reaching ``executemany`` are the ones a
-    ``Row`` would have carried: ``TimestampType`` is turned back into
+    unpickled and zstd-compressed (`session.get_spark` sets the Arrow
+    codec), so the transport writes fewer bytes (the four perfbench gold
+    tables: 2.9 MB as Arrow, 0.66 MB on the socket) and the worker
+    builds each row tuple with one ``zip`` instead of unpickling a
+    ``Row`` object per row. The values reaching ``executemany`` are the
+    ones a ``Row`` would have carried: ``TimestampType`` is turned back into
     the naive worker-local datetime ``Row`` gives. On a 1000-executor
     cluster, `coalesce` the frame to the number of writer connections
     the database can take.

@@ -1423,7 +1423,10 @@ def test_bloom_semi_join_exact_and_prefilter_effective(spark, sf_oracle):
     (false positives removed by the closing join), and the Bloom
     pre-filter alone must admit a superset of the true matches while
     killing most non-matching rows map-side."""
-    from etl_acordos_spark.operators.relational import bloom_semi_join
+    from etl_acordos_spark.operators.relational import (
+        _bloom_prefilter,
+        bloom_semi_join,
+    )
     from etl_acordos_spark.queries.base import t
 
     line = t(spark, sf_oracle, "lineitem")
@@ -1440,8 +1443,8 @@ def test_bloom_semi_join_exact_and_prefilter_effective(spark, sf_oracle):
     # the Bloom stage alone: a superset of the true matches (zero
     # false negatives) that already rejects most of the fact table —
     # the map-side kill is the operator's entire reason to exist
-    n_admitted = bloom_semi_join(
-        line, hot, "l_orderkey", prefilter_only=True
+    n_admitted = _bloom_prefilter(
+        line, hot, "l_orderkey", 1 << 16, 3
     ).count()
     n_total = line.count()
     assert n_true <= n_admitted < n_total / 2

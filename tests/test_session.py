@@ -184,9 +184,11 @@ def test_get_spark_writes_each_shuffle_byte_once(spark):
     the JVM's write() bytes over a ~10 MB ``repartition(4)`` job stay
     near the size of the shuffle data files it leaves. Spark's bypass
     writer (a file per reduce partition, then a copy into the map
-    output) reads 2.0x here."""
-    df = spark.range(0, 150_000, numPartitions=4).selectExpr(
-        "id", "sha2(cast(id AS string), 256) AS h"
+    output) reads 2.0x here. The payload is raw SHA-256 digests, which
+    no shuffle codec can shrink, so the files keep their size under
+    lz4 and zstd alike."""
+    df = spark.range(0, 300_000, numPartitions=4).selectExpr(
+        "id", "unhex(sha2(cast(id AS string), 256)) AS h"
     )
     before = _shuffle_data_files(spark)
     wchar = _jvm_wchar()
@@ -197,3 +199,74 @@ def test_get_spark_writes_each_shuffle_byte_once(spark):
     )
     assert shuffle_bytes > 8_000_000, shuffle_bytes
     assert wrote < 1.3 * shuffle_bytes, (wrote, shuffle_bytes)
+
+
+def _zstd_rows(spark):
+    """~8 MB as Arrow of a compressible string column, with NULLs."""
+    return spark.range(0, 110_000, numPartitions=4).selectExpr(
+        "id",
+        "CASE WHEN id % 101 = 0 THEN NULL ELSE concat(repeat('acordo"
+        " coletivo ', 4), cast(id % 997 AS string)) END AS s",
+    )
+
+
+def _same_rows(a, b) -> bool:
+    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_get_spark_writes_parquet_with_zstd(spark, tmp_path):
+    """Every lake layer `write_parquet_layer` writes is zstd Parquet."""
+    import pyarrow.parquet as pq
+
+    from etl_acordos_spark.sources.parquet_io import write_parquet_layer
+
+    path = write_parquet_layer(
+        _zstd_rows(spark).limit(1000), str(tmp_path), "bronze", "t"
+    )
+    parts = glob.glob(os.path.join(path, "*.parquet"))
+    assert parts
+    for part in parts:
+        meta = pq.ParquetFile(part).metadata
+        codecs = {
+            meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+        assert codecs == {"ZSTD"}, (part, codecs)
+
+
+@pytest.mark.skipif(
+    not os.path.exists("/proc/self/io"), reason="needs Linux /proc/<pid>/io"
+)
+def test_get_spark_compresses_the_arrow_stream_to_python(spark):
+    """The JVM writes the Arrow IPC stream it feeds Python workers
+    zstd-compressed: over a ``mapInArrow`` pass of ~8 MB of Arrow (a
+    compressible string column), the JVM's write() bytes stay under
+    half the Arrow size the workers receive. Uncompressed, they read
+    above it. The rows come back unchanged from that pass and from a
+    ``toPandas`` and an ``applyInPandas`` round trip."""
+    import pyarrow as pa
+
+    df = _zstd_rows(spark)
+
+    def sizes(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"n": [b.num_rows], "nbytes": [b.nbytes]}
+            )
+
+    wchar = _jvm_wchar()
+    got = df.mapInArrow(sizes, "n long, nbytes long").collect()
+    wrote = _jvm_wchar() - wchar
+    arrow_bytes = sum(r["nbytes"] for r in got)
+    assert sum(r["n"] for r in got) == 110_000
+    assert arrow_bytes > 8_000_000, arrow_bytes
+    assert wrote < 0.5 * arrow_bytes, (wrote, arrow_bytes)
+
+    assert _same_rows(df.mapInArrow(lambda bs: bs, df.schema), df)
+    pdf = df.toPandas()
+    assert _same_rows(spark.createDataFrame(pdf, df.schema), df)
+    back = df.groupBy((df.id % 4).alias("g")).applyInPandas(
+        lambda p: p, df.schema
+    )
+    assert _same_rows(back, df)

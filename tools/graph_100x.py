@@ -71,11 +71,7 @@ def main() -> None:
             "spark.driver.memory": DRIVER_MEM,
             "spark.sql.shuffle.partitions": SHUFFLE_PARTS,
             "spark.local.dir": "/tmp/spark_graft_spill_100x",
-            # the wedge shuffle is ~98 GiB raw at 100x: zstd (vs the lz4
-            # default) roughly halves the on-disk shuffle footprint — the
-            # standard cluster setting for shuffle-heavy graph jobs — and
             # compressed checkpoints shrink the serialized edge pins
-            "spark.io.compression.codec": "zstd",
             "spark.checkpoint.compress": "true",
         },
     )
